@@ -1,30 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") == "1"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      // AQE coalesces post-shuffle partitions down to minPartitionSize
-      // (default 1m) — at bench scale a 4-5 MB exchange collapses to 4
-      // tasks even when the stage ABOVE it explodes 4.7 MB -> 81 MB of
-      // pair rows (d12's candidate generate ran on 4 of 32 cores). The
-      // lower floor restores reduce-side parallelism for small-input/
-      // big-output stages; at cluster scale partitions sit far above
-      // either floor, so this is a local-window knob, not a prod tune
-      // (env-overridable for A/B).
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION", "128k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
 
     // noop sink: forces full evaluation of every output column — count()
     // would let the optimizer prune projection-only work and under-report
@@ -68,7 +49,7 @@ object Bench {
       val t0 = System.nanoTime()
       // pmod keeps the running sum ≤ 2e14 — a raw sum(xxhash64) randomly
       // overflows Long and ANSI mode turns that into a fatal throw
-      try spark.range(0L, 200000000L, 1L, cpus.toInt)
+      try spark.range(0L, 200000000L, 1L, cpus)
         .selectExpr("sum(pmod(xxhash64(id), 1000000)) as h")
         .write.format("noop").mode("overwrite").save()
       catch {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage profiler (guide §1/§7): runs one named SparkEntry
   * query under a SparkListener and prints, per job, wall-clock span, task
@@ -17,18 +16,7 @@ object ProfileQ {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1 && !args(1).startsWith("--")) args(1) else "/root/testdata/sf0.1"
     val reps = args.sliding(2).collectFirst { case Array("--reps", n) => n.toInt }.getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED_PARTITION", "128k"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     case class JobRec(id: Int, start: Long, var end: Long = 0L,
                       var taskMs: Long = 0L, var tasks: Int = 0,
@@ -39,8 +27,10 @@ object ProfileQ {
     val stageToJob = scala.collection.mutable.HashMap.empty[Int, Int]
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = jobs.synchronized {
+        // multi-line (streaming) descriptions collapse to one line per job
         val desc = Option(j.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+          .trim.replaceAll("\\s+", " ")
         jobs(j.jobId) = JobRec(j.jobId, j.time, desc = desc.take(60))
         j.stageIds.foreach(s => stageToJob(s) = j.jobId)
         jobs(j.jobId).stages = j.stageIds.size

@@ -70,15 +70,7 @@ object ScaleProbe {
     val reportPath = java.nio.file.Path.of(
       sys.env.getOrElse("SPARK_GRAFT_PROBE_OUT", "SCALE_PROBE.json"))
       .toAbsolutePath
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .getOrCreate() // heap comes from build.sbt's forked -Xmx (16g default)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession() // heap comes from build.sbt's forked -Xmx (16g default)
 
     generate(spark, sf01, sf1)
 

@@ -338,9 +338,7 @@ object Similarity {
   /** Parse the manifest ONCE → (codebook, live assignment dir). This is
     * the only consistent read path: callers that need both MUST take them
     * from a single call, not from [[openIvfCodebook]] + [[assignmentDir]]
-    * separately (two reads can straddle a rebuild's flip). Pre-manifest
-    * layouts (no `meta` line; optional separate `ASSIGNMENT` pointer)
-    * still resolve, defaulting to the original `assignment` directory. */
+    * separately (two reads can straddle a rebuild's flip). */
   private[graft] def resolveIndex(dir: String): (Seq[Centroid], String) = {
     val lines = java.nio.file.Files
       .readString(java.nio.file.Paths.get(dir, "CODEBOOK"))
@@ -348,12 +346,8 @@ object Similarity {
     val (gen, centLines) = lines match {
       case meta +: rest if meta.startsWith("meta\tdir\t") =>
         (meta.split("\t", 3)(2), rest)
-      case _ =>
-        val p = java.nio.file.Paths.get(dir, "ASSIGNMENT")
-        val legacy =
-          if (java.nio.file.Files.exists(p)) java.nio.file.Files.readString(p).trim
-          else "assignment"
-        (legacy, lines)
+      case _ => throw new IllegalStateException(
+        s"$dir/CODEBOOK has no 'meta\tdir' manifest line")
     }
     val cents = centLines.map { line =>
       val Array(id, nq, vec) = line.split("\t", 3)
@@ -385,7 +379,7 @@ object Similarity {
     * per centroid partition (streamed appends leave a file per append
     * per touched centroid — at serving scale the scan cost becomes
     * file-open bound) into a fresh generation directory, then flip the
-    * `ASSIGNMENT` pointer atomically. Readers resolve the pointer per
+    * `CODEBOOK` manifest atomically. Readers resolve the pointer per
     * query, so a query in flight finishes on the old generation and the
     * next one reads the compacted data — identical rows either way. The
     * superseded generation stays on disk for in-flight readers until
@@ -431,12 +425,7 @@ object Similarity {
           java.nio.file.Files.getLastModifiedTime(p).toMillis <= cutoff
       }.map(_.getFileName.toString).toSeq
       finally fs.close()
-    doomed.foreach { name =>
-      val walk = java.nio.file.Files.walk(root.resolve(name))
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-    }
+    doomed.foreach(name => graft.streaming.IndexState.deleteRecursively(root.resolve(name)))
     doomed.sorted
   }
 

@@ -53,12 +53,8 @@ object ExtendedQueries {
     if (loggedScratchBases.add(baseStr))
       System.err.println(s"[graft] scratch base: $baseStr " +
         s"(free ${p.getParent.toFile.getUsableSpace >> 30} GiB)")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-      }
-      rm(p.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      graft.streaming.IndexState.deleteRecursively(p)))
     p.toString
   }
   /** Build-once memo for deterministic streaming INPUT logs: the bench

@@ -1,10 +1,10 @@
 package graft.registry
 
 import graft.conf.IndexerConf
-import graft.streaming.MutationStream
+import graft.streaming.{IndexState, MutationStream}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQuery
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** C3/C4/C7: the master/supervisor collapsed into one driver-side
@@ -176,7 +176,7 @@ class IndexerSupervisor(
         // later re-subscribe gets a fresh subscriptionTimestamp = now and
         // will skip history before it (rewind-to-now)
         Option(running.remove(d.name)).foreach(_.stop())
-        deleteRecursively(Paths.get(ckptDir))
+        IndexState.deleteRecursively(Paths.get(ckptDir))
     }
   }
 
@@ -473,12 +473,8 @@ class IndexerSupervisor(
   /** The standing per-class admitted counters — the budget dashboard. */
   def quotaStatus(name: String): Map[String, Long] = {
     registry.get(name).getOrElse(throw new IllegalStateException(s"no such indexer: $name"))
-    graft.streaming.GenManifest.currentGen(s"${quotaDir(name)}/state") match {
-      case None => Map.empty
-      case Some(gen) =>
-        spark.read.parquet(s"${quotaDir(name)}/state/$gen")
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    }
+    graft.streaming.GenFold.current(spark, s"${quotaDir(name)}/state")
+      .fold(Map.empty[String, Long])(_.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
   }
 
   // --- contamination-audit arm (s30 made operable) ---
@@ -493,7 +489,7 @@ class IndexerSupervisor(
     * the s30 contract). Re-freezing resets the audit. */
   def coverageFreeze(name: String, benchmark: org.apache.spark.sql.DataFrame): Unit = {
     registry.get(name).getOrElse(throw new IllegalStateException(s"no such indexer: $name"))
-    deleteRecursively(Paths.get(coverageDir(name)))
+    IndexState.deleteRecursively(Paths.get(coverageDir(name)))
     benchmark.select("doc_id", "text")
       .write.mode("overwrite").parquet(s"${coverageDir(name)}/bench")
     graft.ops.Dedup.benchGrams(
@@ -542,17 +538,9 @@ class IndexerSupervisor(
   private def executeDelete(d: IndexerDefinition): Unit = {
     registry.update(d.copy(lifecycleState = LifecycleState.Deleting))
     Option(running.remove(d.name)).foreach(_.stop())
-    deleteRecursively(Paths.get(s"$workRoot/${d.name}"))
+    IndexState.deleteRecursively(Paths.get(s"$workRoot/${d.name}"))
     registry.remove(d.name)
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
 }
 
 /** C6: CLI verbs over the registry — add/update/delete/list, mirroring

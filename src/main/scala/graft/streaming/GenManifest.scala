@@ -2,27 +2,26 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, max, min}
+
+import graft.core.ParquetOnce
+
 /** Atomic generation-pointer + high-water-mark manifest for the
-  * constant-size streaming rollups ([[StreamTransitions]],
-  * [[StreamAttribution]], [[StreamQuota]], [[StreamAspect]],
-  * [[StreamBurst]], [[StreamCalibration]], [[StreamDecodeHealth]],
-  * [[StreamPsi]], [[StreamUniqueTokens]]).
+  * constant-size streaming rollups that keep no per-key state
+  * ([[StreamQuota]], [[StreamAspect]], [[StreamBurst]],
+  * [[StreamCalibration]], [[StreamDecodeHealth]], [[StreamPsi]],
+  * [[StreamKmv]], [[StreamGramCoverage]] — all through [[GenFold]]).
   *
   * One `_current` file holds `gen\tlo\thi`, written via temp +
   * ATOMIC_MOVE, so the state advance and the redelivery detector are a
-  * SINGLE commit point. The previous layout (a `_current` pointer flip
-  * followed by a separate `_hwm` write) had a crash window between the
-  * two files: on replay the hwm check would not skip the batch (hwm
-  * stale) but the rollup generation had already folded it — the batch's
-  * additive counts were double-counted. With the fused manifest a crash
-  * anywhere before the move replays the batch against the OLD generation
-  * (correct: the fold is deterministic and the new generation directory
-  * is simply rewritten), and a crash after the move is detected as a
-  * bit-exact redelivery by its (lo, hi) range and skipped.
-  *
-  * Reads stay compatible with the pre-fuse layout (gen-only `_current`
-  * plus sibling `_hwm`) so a long-running monitor restarted across the
-  * upgrade keeps its redelivery guard.
+  * SINGLE commit point: a crash anywhere before the move replays the
+  * batch against the OLD generation (correct: the fold is deterministic
+  * and the new generation directory is simply rewritten), and a crash
+  * after the move is detected as a bit-exact redelivery by its (lo, hi)
+  * range and skipped. Superseded generations are reclaimed by
+  * [[GenMeta.sweep]] — the same two-phase grace-window protocol the
+  * dual-state monitors use.
   */
 object GenManifest {
 
@@ -32,12 +31,6 @@ object GenManifest {
     if (!Files.exists(cur)) None
     else Files.readString(cur).trim.split("\t") match {
       case Array(g, lo, hi) => Some((g, lo.toLong, hi.toLong))
-      case Array(g) => // pre-fuse layout: gen-only pointer, hwm sibling
-        val hwm = Paths.get(dir, "_hwm")
-        if (Files.exists(hwm)) {
-          val Array(lo, hi) = Files.readString(hwm).trim.split("\t").map(_.toLong)
-          Some((g, lo, hi))
-        } else Some((g, Long.MinValue, Long.MinValue))
       case other => throw new IllegalStateException(
         s"unparseable generation manifest in $dir: '${other.mkString("\\t")}'")
     }
@@ -60,14 +53,74 @@ object GenManifest {
       case _ => false
     }
 
-  /** THE commit point: generation pointer and hwm land in one atomic
-    * move; drops a leftover pre-fuse `_hwm` sibling so stale state can
-    * never shadow the manifest. */
-  def commit(dir: String, gen: String, lo: Long, hi: Long): Unit = {
+  /** THE commit point: generation pointer and hwm land in one atomic move. */
+  def commit(dir: String, gen: String, lo: Long, hi: Long): Unit =
     IndexState.atomicWriteString(Paths.get(dir, "_current"), s"$gen\t$lo\t$hi")
-    Files.deleteIfExists(Paths.get(dir, "_hwm"))
-    ()
+}
+
+/** The single-state generation lifecycle of every [[GenManifest]]
+  * monitor, owned once: batch (lo, hi) range (one aggregate job) →
+  * redelivery check → prior generation as a lazy scan → write
+  * `g<batchId>` and seed its schema → manifest commit → superseded-
+  * generation sweep. A monitor supplies only its batch-side aggregate
+  * and its fold expression over [[Step.prior]].
+  *
+  * Ordered folds (additive counters, first-come admission) open with
+  * [[ordered]]; idempotent folds (set union, sketch merge — any arrival
+  * order, redelivery a no-op by algebra) open with [[idempotent]] and
+  * commit the sentinel range, so the manifest format stays uniform. */
+object GenFold {
+
+  /** One fold in progress: the batch range and the live generation. */
+  final class Step private[GenFold] (dir: String, val lo: Long, val hi: Long,
+                                     val prior: Option[DataFrame]) {
+    /** Write `next` as generation `g<batchId>`, commit it with this
+      * step's range, then sweep the superseded generations. Any output
+      * that must land before the commit is written before this call. */
+    def commit(batchId: Long, next: DataFrame): Unit = {
+      val gen = write(dir, batchId, next)
+      GenManifest.commit(dir, gen, lo, hi)
+      GenMeta.sweep(dir, keep = gen)
+    }
   }
+
+  /** Write `next` as generation `g<batchId>` under `dir` (overwriting a
+    * replayed batch's uncommitted attempt) and seed its schema; returns
+    * the generation name for the caller's commit. */
+  def write(dir: String, batchId: Long, next: DataFrame): String = {
+    val gen = s"g$batchId"
+    ParquetOnce.seed(s"gen:$dir", next.schema)
+    next.write.mode("overwrite").parquet(s"$dir/$gen")
+    gen
+  }
+
+  /** Generation `gen` under `dir`, with the schema memoized per `dir`
+    * (every generation is written by the same fold). */
+  def scan(spark: SparkSession, dir: String, gen: String): DataFrame =
+    ParquetOnce.read(spark, s"gen:$dir", s"$dir/$gen")
+
+  /** The live generation of a [[GenManifest]] monitor, None when empty. */
+  def current(spark: SparkSession, dir: String): Option[DataFrame] =
+    GenManifest.currentGen(dir).map(scan(spark, dir, _))
+
+  /** Open an ordered fold over `b`, ranged on the long column `key`.
+    * None when the batch is empty or is a bit-exact redelivery of the
+    * newest commit (already folded: skip); throws on any other overlap,
+    * naming `contract`. */
+  def ordered(dir: String, b: DataFrame, key: String, contract: String): Option[Step] = {
+    Files.createDirectories(Paths.get(dir))
+    val range = b.agg(min(col(key)), max(col(key))).head()
+    if (range.isNullAt(0)) None
+    else {
+      val (lo, hi) = (range.getLong(0), range.getLong(1))
+      if (GenManifest.isRedelivery(dir, lo, hi, contract)) None
+      else Some(new Step(dir, lo, hi, current(b.sparkSession, dir)))
+    }
+  }
+
+  /** Open an idempotent fold: no range, no redelivery check. */
+  def idempotent(spark: SparkSession, dir: String): Step =
+    new Step(dir, Long.MinValue, Long.MinValue, current(spark, dir))
 }
 
 /** The DUAL-STATE variant of [[GenManifest]]: monitors that keep a
@@ -83,47 +136,23 @@ object GenManifest {
   * [[DocStateStore.stateMeta]] keys (Delta's `txn` action, re-expressed):
   * ONE put-if-absent txn entry (or CURRENT flip) advances the per-key
   * delta, the rollup pointer, and the redelivery range together — no
-  * ordering of filesystem writes can tear them apart. */
+  * ordering of filesystem writes can tear them apart.
+  *
+  * Both variants reclaim superseded generations through ONE protocol,
+  * [[sweep]]. */
 object GenMeta {
 
-  /** Pre-fuse filesystem hwm under `dir`: either inside a `_current`
-    * manifest (gen-only or fused — [[GenManifest.read]] handles both)
-    * or a bare `_hwm` file with no gen pointer (the old
-    * [[StreamVocab]] layout, tab-separated `lo\thi`). */
-  private def legacyHwm(dir: String): Option[(Long, Long)] =
-    GenManifest.read(dir)
-      .map { case (_, lo, hi) => (lo, hi) }
-      .filter(_._1 != Long.MinValue)
-      .orElse {
-        val hwm = Paths.get(dir, "_hwm")
-        if (!Files.exists(hwm)) None
-        else {
-          val Array(lo, hi) = Files.readString(hwm).trim.split("\t").map(_.toLong)
-          Some((lo, hi))
-        }
-      }
-
-  /** The live rollup generation for namespace `ns`, None when empty.
-    * Falls back to the pre-fuse filesystem pointer under `legacyDir`
-    * when the store carries no meta yet — a long-running monitor
-    * restarted across the upgrade keeps its rollup instead of silently
-    * restarting the additive totals from zero (the same back-compat
-    * [[GenManifest.read]] keeps for the single-state monitors). */
-  def currentGen(store: DocStateStore, ns: String, legacyDir: String): Option[String] =
-    store.stateMeta(s"$ns.gen").orElse(GenManifest.currentGen(legacyDir))
+  /** The live rollup generation for namespace `ns`, None when empty. */
+  def currentGen(store: DocStateStore, ns: String): Option[String] =
+    store.stateMeta(s"$ns.gen")
 
   /** Ascending-arrival check against the store-resident hwm: true = the
     * batch is a bit-exact redelivery of the newest committed one (skip
-    * it); throws on any other overlap; false = fresh batch. When the
-    * store carries no meta yet, the pre-fuse filesystem hwm under
-    * `legacyDir` is consulted so an upgrade never drops the redelivery
-    * guard while per-key state is retained. */
-  def isRedelivery(store: DocStateStore, ns: String, legacyDir: String,
-                   lo: Long, hi: Long, contract: String): Boolean = {
-    val hwm = store.stateMeta(s"$ns.hwm")
-      .map { h => val Array(pl, ph) = h.split(",").map(_.toLong); (pl, ph) }
-      .orElse(legacyHwm(legacyDir))
-    hwm match {
+    * it); throws on any other overlap; false = fresh batch. */
+  def isRedelivery(store: DocStateStore, ns: String,
+                   lo: Long, hi: Long, contract: String): Boolean =
+    store.stateMeta(s"$ns.hwm")
+      .map { h => val Array(pl, ph) = h.split(",").map(_.toLong); (pl, ph) } match {
       case Some((pl, ph)) =>
         if (lo == pl && hi == ph) true
         else if (lo <= ph) throw new IllegalStateException(
@@ -132,7 +161,6 @@ object GenMeta {
         else false
       case None => false
     }
-  }
 
   /** The meta entries a monitor attaches to its store commit. */
   def kv(ns: String, gen: String, lo: Long, hi: Long): Map[String, String] =
@@ -145,13 +173,13 @@ object GenMeta {
     * sweep that sees a superseded dir stamps a `_doomed` marker (an
     * underscore file, invisible to parquet readers) recording the
     * supersession time; only a later sweep deletes dirs whose stamp is
-    * older than `graceMs`. A concurrent [[GenMeta.currentGen]] reader
-    * that resolved the old pointer but has not yet materialized its
-    * lazy parquet scan therefore never hits FileNotFoundException
-    * mid-read — the same discipline as the store vacuum paths. Once
-    * the store meta owns the pointer, any pre-fuse `_current`/`_hwm`
-    * siblings are dropped so stale filesystem state can never shadow
-    * the fused manifest.
+    * older than `graceMs`. A concurrent reader that resolved the old
+    * pointer ([[GenManifest.currentGen]] or [[currentGen]]) but has not
+    * yet materialized its lazy parquet scan therefore never hits
+    * FileNotFoundException mid-read — the same discipline as the store
+    * vacuum paths. Only `g*` directories are touched: the pointer (a
+    * `_current` manifest or the store meta) is never the sweep's to
+    * delete.
     *
     * Retention is bounded by COUNT as well as age: only the
     * `graceKeep` most-recently-superseded generations get the FULL
@@ -191,8 +219,6 @@ object GenMeta {
                                       graceKeep: Int, graceFloorMs: Long): Unit = {
     val root = Paths.get(aggDir)
     if (!Files.exists(root)) return
-    Files.deleteIfExists(root.resolve("_current"))
-    Files.deleteIfExists(root.resolve("_hwm"))
     val fs = Files.list(root)
     val superseded =
       try {
@@ -227,12 +253,8 @@ object GenMeta {
           else { IndexState.atomicWriteString(stamp, now.toString); now }
         } else { IndexState.atomicWriteString(stamp, now.toString); now }
       val age = now - doomedAt
-      if (age >= graceMs || (rank >= graceKeep && age >= graceFloorMs)) {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().forEachRemaining(f => { Files.deleteIfExists(f); () })
-        finally walk.close()
-      }
+      if (age >= graceMs || (rank >= graceKeep && age >= graceFloorMs))
+        IndexState.deleteRecursively(p)
     }
   }
 }

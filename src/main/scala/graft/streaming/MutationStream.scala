@@ -166,15 +166,7 @@ class IndexState(val indexDir: String, spark: SparkSession, requestedBuckets: In
           Files.getLastModifiedTime(p).toMillis <= cutoff
       }.map(_.getFileName.toString).toSeq
       finally fs.close()
-    doomed.foreach { name =>
-      val p = root.resolve(name)
-      if (Files.isDirectory(p)) {
-        val walk = Files.walk(p)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .iterator().asScala.foreach(Files.deleteIfExists(_))
-        finally walk.close()
-      } else Files.deleteIfExists(p)
-    }
+    doomed.foreach(name => IndexState.deleteRecursively(root.resolve(name)))
     doomed.sorted
   }
 
@@ -303,6 +295,15 @@ object IndexState {
     Files.writeString(tmp, content)
     Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
+
+  /** Delete `p` and everything under it; a missing path is a no-op. */
+  def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .iterator().forEachRemaining(f => { Files.deleteIfExists(f); () })
+      finally walk.close()
+    }
 }
 
 /** T6 monitoring: one indexer's drain/progress report — the engine's

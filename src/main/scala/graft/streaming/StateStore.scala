@@ -481,13 +481,7 @@ class TxnLogState(val stateDir: String, spark: SparkSession,
           Files.getLastModifiedTime(p).toMillis <= cutoff
       }.map(_.getFileName.toString).toSeq
       finally fs.close()
-    doomed.foreach { name =>
-      val p = root.resolve(name)
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
+    doomed.foreach(name => IndexState.deleteRecursively(root.resolve(name)))
     doomed.sorted
   }
 }

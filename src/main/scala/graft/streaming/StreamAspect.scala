@@ -1,9 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming ASPECT-BUCKET census — m16's batch plan maintained over a
   * media ingest stream: every arriving image header-decodes and assigns
@@ -19,48 +18,26 @@ import org.apache.spark.sql.functions._
   * m16 bit-for-bit. */
 object StreamAspect {
 
-  private def currentGen(aggDir: String): Option[String] =
-    GenManifest.currentGen(aggDir)
-
   /** Fold one (doc_id, mime, payload) micro-batch. */
   def applyBatch(aggDir: String, batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(aggDir))
     val b = batch.select(col("doc_id"), col("mime"), col("payload")).cache()
-    try {
-      val range = b.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      if (range.isNullAt(0)) return
-      val (lo, hi) = (range.getLong(0), range.getLong(1))
-      if (GenManifest.isRedelivery(aggDir, lo, hi,
-        "additive bucket counters equal the batch census only under " +
-          "ascending doc_id arrival")) return
+    try GenFold.ordered(aggDir, b, "doc_id",
+      "additive bucket counters equal the batch census only under " +
+        "ascending doc_id arrival").foreach { f =>
       val batchCensus = graft.ops.Multimodal.aspectBuckets(b).toDF()
         .groupBy(col("bucket_w"), col("bucket_h"))
         .agg(count(lit(1)).as("n_images"))
-      val parts = Seq(Some(batchCensus),
-        currentGen(aggDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
-      val next = parts.reduce(_ unionByName _)
+      f.commit(batchId, (batchCensus +: f.prior.toSeq).reduce(_ unionByName _)
         .groupBy(col("bucket_w"), col("bucket_h"))
-        .agg(sum(col("n_images")).as("n_images"))
-      val gen = s"g$batchId"
-      val prevGen = currentGen(aggDir)
-      graft.core.ParquetOnce.seed(s"gen:$aggDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$aggDir/$gen")
-      GenManifest.commit(aggDir, gen, lo, hi)
-      prevGen.filter(_ != gen).foreach { g =>
-        def rm(f: java.io.File): Unit = {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-        }
-        rm(Paths.get(aggDir, g).toFile)
-      }
+        .agg(sum(col("n_images")).as("n_images")))
     } finally { b.unpersist(blocking = false); () }
   }
 
   /** The standing batch plan — m16's output shape (targets derived at
     * read time, pixel budget 4096). */
   def summary(spark: SparkSession, aggDir: String): DataFrame =
-    currentGen(aggDir) match {
-      case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g")
+    GenFold.current(spark, aggDir) match {
+      case Some(census) => census
         .withColumn("scale",
           floor(sqrt(expr("CAST(4096 div (bucket_w * bucket_h) AS DOUBLE)"))))
         .select(col("bucket_w"), col("bucket_h"),
@@ -73,18 +50,9 @@ object StreamAspect {
   /** Convenience drain over a (doc_id, mime, payload) log. */
   def drain(spark: SparkSession, aggDir: String, inPath: String,
             ckptPath: String): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", "long").add("mime", "string").add("payload", "binary")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(aggDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType()
+      .add("doc_id", "long").add("mime", "string").add("payload", "binary"),
+      inPath, ckptPath)((b, id) => applyBatch(aggDir, b, id))
     summary(spark, aggDir)
   }
 }

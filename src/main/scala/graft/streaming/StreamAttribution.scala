@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming last-touch attribution — q24's marketing-attribution
   * rollup maintained incrementally over an unbounded event stream.
@@ -86,7 +87,7 @@ object StreamAttribution {
           "of the ascending-arrival contract; null events cannot be placed")
       val lo = census.map(_.getAs[Long]("lo")).min
       val hi = census.map(_.getAs[Long]("hi")).max
-      if (GenMeta.isRedelivery(touches, Ns, aggDir, lo, hi,
+      if (GenMeta.isRedelivery(touches, Ns, lo, hi,
         "additive attribution equals the batch operator only under " +
           "ascending event_id arrival")) return // already folded: skip
       val writeBuckets = census.filter(_.getAs[Boolean]("wr"))
@@ -110,14 +111,12 @@ object StreamAttribution {
 
       // job 2 — fold the rollup generation (≤ touch-types rows)
       val parts = Seq(Some(batchAgg),
-        GenMeta.currentGen(touches, Ns, aggDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
+        GenMeta.currentGen(touches, Ns).map(GenFold.scan(spark, aggDir, _))).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("touch"))
         .agg(sum(col("n_purchases")).as("n_purchases"),
           sum(col("revenue")).cast("decimal(18,6)").as("revenue"))
-      val gen = s"g$batchId"
-      graft.core.ParquetOnce.seed(s"gen:$aggDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$aggDir/$gen")
+      val gen = GenFold.write(aggDir, batchId, next)
 
       // per-user touch state: latest non-purchase event in this trigger
       // supersedes the stored one (ascending arrival); the user-keyed
@@ -154,8 +153,8 @@ object StreamAttribution {
 
   /** The standing rollup — q24's output shape. */
   def summary(spark: SparkSession, touches: DocStateStore, aggDir: String): DataFrame =
-    GenMeta.currentGen(touches, Ns, aggDir) match {
-      case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g")
+    GenMeta.currentGen(touches, Ns) match {
+      case Some(g) => GenFold.scan(spark, aggDir, g)
         .select(col("touch"), col("n_purchases"),
           col("revenue").cast("double").as("revenue"))
       case None => throw new IllegalStateException("no attribution state committed yet")
@@ -164,19 +163,10 @@ object StreamAttribution {
   /** Convenience drain over a (user_id, event_id, event_type, value) log. */
   def drain(spark: SparkSession, touches: DocStateStore, aggDir: String,
             inPath: String, ckptPath: String): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
+    Drain.run(spark, new StructType()
       .add("user_id", "long").add("event_id", "long")
-      .add("event_type", "string").add("value", "double")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(touches, aggDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+      .add("event_type", "string").add("value", "double"),
+      inPath, ckptPath)((b, id) => applyBatch(touches, aggDir, b, id))
     summary(spark, touches, aggDir)
   }
 }

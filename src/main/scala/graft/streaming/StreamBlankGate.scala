@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Streaming BLANK-media gate — [[graft.ops.Multimodal.blankFilter]]
   * applied per micro-batch: every arriving image's dominant-tone share
@@ -21,18 +22,9 @@ object StreamBlankGate {
   /** Convenience drain over a (doc_id, mime, payload) media log. */
   def drain(spark: SparkSession, inPath: String, outPath: String,
             ckptPath: String): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", "long").add("mime", "string").add("payload", "binary")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(b, outPath)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType()
+      .add("doc_id", "long").add("mime", "string").add("payload", "binary"),
+      inPath, ckptPath)((b, _) => applyBatch(b, outPath))
     spark.read.parquet(outPath)
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming cluster-quota admission — p36's cluster-balanced budget as
   * a first-come ingestion gate over an EMBEDDING stream: each arriving
@@ -41,21 +42,10 @@ object StreamClusterQuota {
             cents: Seq[graft.ops.Similarity.Centroid],
             quotas: Map[String, Long], stateDir: String,
             outPath: String, ckptPath: String): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("vec_id", "long")
-      .add("embedding", org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.FloatType))
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(b, "vec_id", "embedding", cents, quotas, stateDir, outPath, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType()
+      .add("vec_id", "long").add("embedding", "array<float>"),
+      inPath, ckptPath)((b, id) =>
+        applyBatch(b, "vec_id", "embedding", cents, quotas, stateDir, outPath, id))
     // drop the batch-tag partition column (StreamQuota's idempotent output)
     spark.read.parquet(outPath).select(col("doc_id"), col("cls"), col("adm_rk"))
   }

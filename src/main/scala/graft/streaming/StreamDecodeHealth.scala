@@ -1,9 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming DECODE-HEALTH monitor — m20's per-mime integrity census
   * maintained over the media ingest stream: the live alarm for an
@@ -15,46 +14,24 @@ import org.apache.spark.sql.functions._
   * at READ time. Drained census ≡ batch m20 bit-for-bit. */
 object StreamDecodeHealth {
 
-  private def currentGen(aggDir: String): Option[String] =
-    GenManifest.currentGen(aggDir)
-
   /** Fold one (doc_id, mime, payload) micro-batch. */
   def applyBatch(aggDir: String, batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(aggDir))
     val b = batch.select(col("doc_id"), col("mime"), col("payload")).cache()
-    try {
-      val range = b.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      if (range.isNullAt(0)) return
-      val (lo, hi) = (range.getLong(0), range.getLong(1))
-      if (GenManifest.isRedelivery(aggDir, lo, hi,
-        "additive health counters equal the batch census only under " +
-          "ascending doc_id arrival")) return // already folded: skip
+    try GenFold.ordered(aggDir, b, "doc_id",
+      "additive health counters equal the batch census only under " +
+        "ascending doc_id arrival").foreach { f =>
       val batchCensus = graft.ops.Multimodal.decodeHealth(b)
         .select(col("mime"), col("n"), col("n_decodable"))
-      val parts = Seq(Some(batchCensus),
-        currentGen(aggDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
-      val next = parts.reduce(_ unionByName _)
+      f.commit(batchId, (batchCensus +: f.prior.toSeq).reduce(_ unionByName _)
         .groupBy(col("mime"))
-        .agg(sum(col("n")).as("n"), sum(col("n_decodable")).as("n_decodable"))
-      val gen = s"g$batchId"
-      val prevGen = currentGen(aggDir)
-      graft.core.ParquetOnce.seed(s"gen:$aggDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$aggDir/$gen")
-      GenManifest.commit(aggDir, gen, lo, hi) // gen + hwm in ONE atomic move
-      prevGen.filter(_ != gen).foreach { g =>
-        def rm(f: java.io.File): Unit = {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-        }
-        rm(Paths.get(aggDir, g).toFile)
-      }
+        .agg(sum(col("n")).as("n"), sum(col("n_decodable")).as("n_decodable")))
     } finally { b.unpersist(blocking = false); () }
   }
 
   /** The standing census — batch m20's output shape. */
   def summary(spark: SparkSession, aggDir: String): DataFrame =
-    currentGen(aggDir) match {
-      case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g")
+    GenFold.current(spark, aggDir) match {
+      case Some(census) => census
         .withColumn("ok_ppm", expr("(n_decodable * 1000000L) div n"))
         .select(col("mime"), col("n"), col("n_decodable"), col("ok_ppm"))
       case None => throw new IllegalStateException("no decode-health state committed yet")
@@ -63,18 +40,9 @@ object StreamDecodeHealth {
   /** Convenience drain over a (doc_id, mime, payload) log. */
   def drain(spark: SparkSession, aggDir: String, inPath: String,
             ckptPath: String): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", "long").add("mime", "string").add("payload", "binary")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(aggDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType()
+      .add("doc_id", "long").add("mime", "string").add("payload", "binary"),
+      inPath, ckptPath)((b, id) => applyBatch(aggDir, b, id))
     summary(spark, aggDir)
   }
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.Similarity
 import graft.ops.Similarity.Centroid
@@ -53,19 +54,9 @@ object StreamDrift {
     * through [[applyBatch]], return the summary. */
   def drain(spark: SparkSession, cents: Seq[Centroid], inPath: String,
             outDir: String, ckptPath: String, lowFit: Double = 0.5): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("vec_id", "long").add("q", "array<long>").add("nq", "long")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(outDir, cents, b, id, lowFit)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType()
+      .add("vec_id", "long").add("q", "array<long>").add("nq", "long"),
+      inPath, ckptPath)((b, id) => applyBatch(outDir, cents, b, id, lowFit))
     summary(spark, outDir)
   }
 }

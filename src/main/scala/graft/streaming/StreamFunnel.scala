@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming funnel analysis — q20's stage-first-occurrence counts
   * maintained incrementally. Per-user state is the three nullable stage
@@ -62,18 +63,9 @@ object StreamFunnel {
   /** Convenience drain over a (user_id, event_id, event_type) log. */
   def drain(spark: SparkSession, state: DocStateStore, inPath: String,
             ckptPath: String): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("user_id", "long").add("event_id", "long").add("event_type", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(state, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType()
+      .add("user_id", "long").add("event_id", "long").add("event_type", "string"),
+      inPath, ckptPath)((b, id) => applyBatch(state, b, id))
     summary(state)
   }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming benchmark gram-coverage audit — the t27 contamination
   * number maintained on the ingest path, so a release policy reads a
@@ -22,52 +21,36 @@ import org.apache.spark.sql.functions._
   * frozen probe gram set (the t27/d17 admission discipline — nothing
   * corpus-sized ever shuffles by gram), the tiny survivor set unions
   * into the standing state, and the new generation lands behind an
-  * atomic `_current` pointer flip (immutable generations, superseded
-  * ones vacuumed — the s17 commit scheme; full-state rewrite per
-  * trigger is fine because the state is probe-bounded).
+  * atomic `_current` pointer flip ([[GenFold]]: immutable generations,
+  * superseded ones reclaimed by the [[GenMeta.sweep]] grace window;
+  * full-state rewrite per trigger is fine because the state is
+  * probe-bounded).
   *
   * Drain-end coverage shares [[graft.ops.Dedup.coverageFromSeen]] with
   * the batch operator, so stream ≡ batch is an identity: t27's oracle
   * verbatim. */
 object StreamGramCoverage {
 
-  private def currentGen(stateDir: String): Option[String] =
-    GenManifest.currentGen(stateDir)
-
   /** The standing seen-gram set (one `g` column); empty before the
     * first commit. */
   def readState(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    currentGen(stateDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$stateDir", s"$stateDir/$g"))
+    GenFold.current(spark, stateDir)
 
   /** Union one micro-batch's benchmark-gram hits into the state.
     * `probeGrams` is the FROZEN distinct benchmark gram set (a `g`
     * column) — plan-stable across triggers so scores are comparable. */
   def applyBatch(batch: DataFrame, idCol: String, textCol: String, n: Int,
                  probeGrams: DataFrame, stateDir: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val prev = currentGen(stateDir)
+    val f = GenFold.idempotent(batch.sparkSession, stateDir)
     val batchGrams = graft.ops.Dedup
       .shingleHashSets(batch, idCol, textCol, n)
       .select(explode(col("hs")).as("g"))
     val survivors = batchGrams
       .join(broadcast(probeGrams), Seq("g"), "left_semi").distinct()
-    val merged = prev match {
-      case Some(g) =>
-        graft.core.ParquetOnce.read(spark, s"gen:$stateDir", s"$stateDir/$g").unionByName(survivors).distinct()
+    f.commit(batchId, f.prior match {
+      case Some(p) => p.unionByName(survivors).distinct()
       case None => survivors
-    }
-    val gen = s"g$batchId"
-    graft.core.ParquetOnce.seed(s"gen:$stateDir", merged.schema)
-    merged.write.mode("overwrite").parquet(s"$stateDir/$gen")
-    // idempotent set-union ⇒ no hwm by design; the sentinel keeps the
-    // manifest format uniform across every monitor (one reader, no drift)
-    GenManifest.commit(stateDir, gen, Long.MinValue, Long.MinValue)
-    prev.filter(_ != gen).foreach { g => // vacuum the superseded generation
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-      }
-      rm(Paths.get(stateDir, g).toFile)
-    }
+    })
   }
 
   /** Drain a (doc_id, text) log through the audit; return the per-probe
@@ -79,19 +62,9 @@ object StreamGramCoverage {
     // freeze the probe gram set ONCE: bench-sized, reused every trigger
     val probeGrams = graft.ops.Dedup.benchGrams(benchmark, idCol, textCol, n)
       .select("g").distinct().localCheckpoint()
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", "long").add("text", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(b, "doc_id", textCol, n, probeGrams, stateDir, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType().add("doc_id", "long").add("text", "string"),
+      inPath, ckptPath)((b, id) =>
+        applyBatch(b, "doc_id", textCol, n, probeGrams, stateDir, id))
     val seen = readState(spark, stateDir)
       .getOrElse(sys.error(s"StreamGramCoverage: no state under $stateDir"))
     graft.ops.Dedup.coverageFromSeen(benchmark, idCol, textCol, n, seen)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.Multimodal
 
@@ -102,19 +103,9 @@ object StreamMediaGate {
   /** Convenience drain over a (doc_id, mime, payload) media log. */
   def drain(spark: SparkSession, state: DocStateStore, inPath: String,
             outPath: String, ckptPath: String, maxHamming: Int = 3): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", "long").add("mime", "string").add("payload", "binary")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(state, b, outPath, id, maxHamming)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType()
+      .add("doc_id", "long").add("mime", "string").add("payload", "binary"),
+      inPath, ckptPath)((b, id) => applyBatch(state, b, outPath, id, maxHamming))
     summary(spark, outPath)
   }
 }

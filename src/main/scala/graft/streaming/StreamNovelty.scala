@@ -30,16 +30,6 @@ import java.nio.file.{Files, Paths}
   * recent batch is tolerated — at-least-once replays are expected). */
 private[streaming] object KgramStreamCore {
 
-  private val trace = sys.env.contains("GRAFT_TRACE")
-  private[streaming] def timed[A](label: String)(body: => A): A =
-    if (!trace) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"[trace] $label: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-
   /** Validate the ascending-arrival contract: the batch's min doc_id
     * must exceed the stored high-water mark (the previous batch's max).
     * Returns Some((lo, hi)) to pass to [[advanceHwm]] after the commit,
@@ -269,7 +259,7 @@ private[streaming] object KgramStreamCore {
     * join machinery). */
   def probeSeen(state: DocStateStore, sum: KgramSummary,
                 spark: SparkSession): Array[Long] =
-    timed("probeSeen")(state.readBuckets(sum.touched) match {
+    state.readBuckets(sum.touched) match {
       case None => Array.emptyLongArray
       case Some(df) =>
         import spark.implicits._
@@ -291,7 +281,7 @@ private[streaming] object KgramStreamCore {
           finally bc.destroy()
         java.util.Arrays.sort(hits)
         hits
-    })
+    }
 
   /** Append the batch's first-occurrence k-grams (summary hashes not in
     * `seenSorted`) into the store as a delta: write volume is O(fresh),
@@ -324,40 +314,21 @@ private[streaming] object KgramStreamCore {
           }
         }
         .toDF("id")
-      timed("commitAppend")(state.commitAppend(freshDf, f"n$batchId%09d", sum.touched))
+      state.commitAppend(freshDf, f"n$batchId%09d", sum.touched)
       // destroy once the commit action has consumed it: millions of
       // packed longs per char-granular trigger must not wait on the
       // GC-driven ContextCleaner across a long drain
     } finally bc.destroy()
-    timed("maintain")(state.maintain())
+    state.maintain()
   }
 
-  /** Drain an ordered document log (doc_id long, text string) file-by-
-    * file through `perBatch`, then read back the accumulated output.
-    *
-    * Per-trigger scheduling discipline (the rank-loop lesson applied to
-    * drains): every frame inside a trigger is TRIGGER-sized, so the
-    * session's shuffle width is pure task-scheduling tax on small
-    * triggers, and AQE's per-stage materialization is a fixed tax per
-    * shuffle with nothing to re-plan (the partition count is derived
-    * from the trigger's own split count). Both are scoped to the
-    * foreachBatch body and restored in `finally`; a cluster-scale
-    * trigger (many input splits) keeps the session width. */
+  /** Drain an ordered document log (doc_id long, text string) through
+    * `perBatch` ([[Drain.run]]), then read back the accumulated output. */
   def drain(spark: SparkSession, inPath: String, outPath: String,
             ckptPath: String, outSchema: String)
            (perBatch: (DataFrame, Long) => Unit): DataFrame = {
-    val schema = new StructType().add("doc_id", "long").add("text", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        timed(s"perBatch $id")(TriggerScope.scoped(b)(perBatch(b, id)))
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    timed("awaitTermination")(q.awaitTermination())
+    Drain.run(spark, new StructType().add("doc_id", "long").add("text", "string"),
+      inPath, ckptPath)(perBatch)
     spark.read.schema(outSchema).parquet(outPath)
   }
 }
@@ -396,33 +367,30 @@ object StreamNovelty {
                  batchId: Long): Seq[Int] = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val sum = KgramStreamCore.timed("summarize")(
-      KgramStreamCore.summarize(batch, idCol, textCol, k, state.buckets))
+    val sum = KgramStreamCore.summarize(batch, idCol, textCol, k, state.buckets)
     KgramStreamCore.checkAscending(outPath, sum.range)
     val seen = KgramStreamCore.probeSeen(state, sum, spark)
-    KgramStreamCore.timed("output") {
-      // novel per doc = its fresh winner count, folded driver-side from
-      // the summary (the retired relational tag-union aggregation moved
-      // trigger-sized frames through a shuffle to compute the same sums)
-      val novel = new java.util.HashMap[java.lang.Long, Long]()
-      var i = 0
-      while (i < sum.hs.length) {
-        if (java.util.Arrays.binarySearch(seen, sum.hs(i)) < 0) {
-          val d = java.lang.Long.valueOf(sum.winDoc(i))
-          novel.put(d, novel.getOrDefault(d, 0L) + 1L)
-        }
-        i += 1
+    // novel per doc = its fresh winner count, folded driver-side from
+    // the summary (the retired relational tag-union aggregation moved
+    // trigger-sized frames through a shuffle to compute the same sums)
+    val novel = new java.util.HashMap[java.lang.Long, Long]()
+    var i = 0
+    while (i < sum.hs.length) {
+      if (java.util.Arrays.binarySearch(seen, sum.hs(i)) < 0) {
+        val d = java.lang.Long.valueOf(sum.winDoc(i))
+        novel.put(d, novel.getOrDefault(d, 0L) + 1L)
       }
-      val rows = sum.docIds.indices.map { j =>
-        val d = sum.docIds(j)
-        val w = sum.docWindows(j)
-        val n = novel.getOrDefault(java.lang.Long.valueOf(d), 0L)
-        (d, w, n, n.toDouble / w)
-      }
-      spark.createDataset(rows)
-        .toDF("doc_id", "n_windows", "n_novel", "novelty")
-        .coalesce(1).write.mode("append").parquet(outPath)
+      i += 1
     }
+    val rows = sum.docIds.indices.map { j =>
+      val d = sum.docIds(j)
+      val w = sum.docWindows(j)
+      val n = novel.getOrDefault(java.lang.Long.valueOf(d), 0L)
+      (d, w, n, n.toDouble / w)
+    }
+    spark.createDataset(rows)
+      .toDF("doc_id", "n_windows", "n_novel", "novelty")
+      .coalesce(1).write.mode("append").parquet(outPath)
     KgramStreamCore.commitFresh(state, sum, seen, batchId, spark)
     KgramStreamCore.advanceHwm(outPath, sum.range)
     sum.touched
@@ -538,54 +506,51 @@ object StreamSpanDedup {
     // ~a third of this drain's per-trigger wall for pure recomputation
     val hashed = KgramStreamCore.hashedDocs(batch, idCol, textCol, k).persist()
     try {
-      val sum = KgramStreamCore.timed("summarize")(
-        KgramStreamCore.summarizeHashed(hashed, state.buckets))
+      val sum = KgramStreamCore.summarizeHashed(hashed, state.buckets)
       KgramStreamCore.checkAscending(outPath, sum.range)
       val seen = KgramStreamCore.probeSeen(state, sum, spark)
-      KgramStreamCore.timed("output") {
-        // duplicate starts: every occurrence of a previously-seen k-gram,
-        // plus every non-winner occurrence within the batch — decided per
-        // occurrence in one map-only pass over the cached hashes against
-        // the broadcast summary (the retired relational path re-joined the
-        // occ explode to winners and the seen marks, then collected starts
-        // per doc through another shuffle). The rebuild runs inline with
-        // the same removeTokenSpans kernel the expression wraps.
-        val bcHs = spark.sparkContext.broadcast(sum.hs)
-        val bcDoc = spark.sparkContext.broadcast(sum.winDoc)
-        val bcPos = spark.sparkContext.broadcast(sum.winPos)
-        val bcSeen = spark.sparkContext.broadcast(seen)
-        try hashed
-          .mapPartitions { it =>
-            val hsK = bcHs.value; val wd = bcDoc.value; val wp = bcPos.value
-            val sn = bcSeen.value
-            it.map { case (docId, text, hs) =>
-              if (text == null)
-                (docId, None: Option[Long], None: Option[Long], null: String)
-              else {
-                val starts = scala.collection.mutable.ArrayBuffer.empty[Long]
-                var i = 0
-                while (i < hs.length) {
-                  val h = hs(i)
-                  val pos = (i + 1).toLong
-                  val gi = java.util.Arrays.binarySearch(hsK, h) // always ≥ 0
-                  if (java.util.Arrays.binarySearch(sn, h) >= 0 ||
-                      !(wd(gi) == docId && wp(gi) == pos)) starts += pos
-                  i += 1
-                }
-                val nTok = graft.expr.TextHash.tokenCount(text)
-                val clean = graft.expr.TextHash.removeTokenSpans(text, starts.toArray, k)
-                (docId, Some(nTok), Some(nTok - graft.expr.TextHash.tokenCount(clean)),
-                  clean)
+      // duplicate starts: every occurrence of a previously-seen k-gram,
+      // plus every non-winner occurrence within the batch — decided per
+      // occurrence in one map-only pass over the cached hashes against
+      // the broadcast summary (the retired relational path re-joined the
+      // occ explode to winners and the seen marks, then collected starts
+      // per doc through another shuffle). The rebuild runs inline with
+      // the same removeTokenSpans kernel the expression wraps.
+      val bcHs = spark.sparkContext.broadcast(sum.hs)
+      val bcDoc = spark.sparkContext.broadcast(sum.winDoc)
+      val bcPos = spark.sparkContext.broadcast(sum.winPos)
+      val bcSeen = spark.sparkContext.broadcast(seen)
+      try hashed
+        .mapPartitions { it =>
+          val hsK = bcHs.value; val wd = bcDoc.value; val wp = bcPos.value
+          val sn = bcSeen.value
+          it.map { case (docId, text, hs) =>
+            if (text == null)
+              (docId, None: Option[Long], None: Option[Long], null: String)
+            else {
+              val starts = scala.collection.mutable.ArrayBuffer.empty[Long]
+              var i = 0
+              while (i < hs.length) {
+                val h = hs(i)
+                val pos = (i + 1).toLong
+                val gi = java.util.Arrays.binarySearch(hsK, h) // always ≥ 0
+                if (java.util.Arrays.binarySearch(sn, h) >= 0 ||
+                    !(wd(gi) == docId && wp(gi) == pos)) starts += pos
+                i += 1
               }
+              val nTok = graft.expr.TextHash.tokenCount(text)
+              val clean = graft.expr.TextHash.removeTokenSpans(text, starts.toArray, k)
+              (docId, Some(nTok), Some(nTok - graft.expr.TextHash.tokenCount(clean)),
+                clean)
             }
           }
-          .toDF("doc_id", "n_tokens", "n_removed", "clean_text")
-          .write.mode("append").parquet(outPath)
-        // the write above is the only consumer: destroy the trigger's
-        // summary broadcasts eagerly instead of leaving millions of longs
-        // to the GC-driven ContextCleaner across a long drain
-        finally Seq(bcHs, bcDoc, bcPos, bcSeen).foreach(_.destroy())
-      }
+        }
+        .toDF("doc_id", "n_tokens", "n_removed", "clean_text")
+        .write.mode("append").parquet(outPath)
+      // the write above is the only consumer: destroy the trigger's
+      // summary broadcasts eagerly instead of leaving millions of longs
+      // to the GC-driven ContextCleaner across a long drain
+      finally Seq(bcHs, bcDoc, bcPos, bcSeen).foreach(_.destroy())
       KgramStreamCore.commitFresh(state, sum, seen, batchId, spark)
       KgramStreamCore.advanceHwm(outPath, sum.range)
       sum.touched
@@ -632,48 +597,45 @@ object StreamCharSpanDedup {
         (d, t, if (t == null) null else graft.expr.TextHash.charKgramHashes60(t, k))
       }.persist()
     try {
-      val sum = KgramStreamCore.timed("summarize")(
-        KgramStreamCore.summarizeHashed(hashed, state.buckets))
+      val sum = KgramStreamCore.summarizeHashed(hashed, state.buckets)
       KgramStreamCore.checkAscending(outPath, sum.range)
       val seen = KgramStreamCore.probeSeen(state, sum, spark)
-      KgramStreamCore.timed("output") {
-        val bcHs = spark.sparkContext.broadcast(sum.hs)
-        val bcDoc = spark.sparkContext.broadcast(sum.winDoc)
-        val bcPos = spark.sparkContext.broadcast(sum.winPos)
-        val bcSeen = spark.sparkContext.broadcast(seen)
-        try hashed
-          .mapPartitions { it =>
-            val hsK = bcHs.value; val wd = bcDoc.value; val wp = bcPos.value
-            val sn = bcSeen.value
-            it.map { case (docId, text, hs) =>
-              if (text == null)
-                (docId, None: Option[Long], None: Option[Long], null: String)
-              else {
-                val starts = scala.collection.mutable.ArrayBuffer.empty[Long]
-                var i = 0
-                while (i < hs.length) {
-                  val h = hs(i)
-                  val pos = (i + 1).toLong
-                  val gi = java.util.Arrays.binarySearch(hsK, h) // always ≥ 0
-                  if (java.util.Arrays.binarySearch(sn, h) >= 0 ||
-                      !(wd(gi) == docId && wp(gi) == pos)) starts += pos
-                  i += 1
-                }
-                // code points, not UTF-16 units — the same frame as the
-                // kernels, Spark length(), and the DuckDB oracle
-                val nChars = graft.expr.TextHash.normalizedCodePointCount(text)
-                val clean = graft.expr.TextHash.removeCharSpans(text, starts.toArray, k)
-                (docId, Some(nChars),
-                  Some(nChars - clean.codePointCount(0, clean.length)), clean)
+      val bcHs = spark.sparkContext.broadcast(sum.hs)
+      val bcDoc = spark.sparkContext.broadcast(sum.winDoc)
+      val bcPos = spark.sparkContext.broadcast(sum.winPos)
+      val bcSeen = spark.sparkContext.broadcast(seen)
+      try hashed
+        .mapPartitions { it =>
+          val hsK = bcHs.value; val wd = bcDoc.value; val wp = bcPos.value
+          val sn = bcSeen.value
+          it.map { case (docId, text, hs) =>
+            if (text == null)
+              (docId, None: Option[Long], None: Option[Long], null: String)
+            else {
+              val starts = scala.collection.mutable.ArrayBuffer.empty[Long]
+              var i = 0
+              while (i < hs.length) {
+                val h = hs(i)
+                val pos = (i + 1).toLong
+                val gi = java.util.Arrays.binarySearch(hsK, h) // always ≥ 0
+                if (java.util.Arrays.binarySearch(sn, h) >= 0 ||
+                    !(wd(gi) == docId && wp(gi) == pos)) starts += pos
+                i += 1
               }
+              // code points, not UTF-16 units — the same frame as the
+              // kernels, Spark length(), and the DuckDB oracle
+              val nChars = graft.expr.TextHash.normalizedCodePointCount(text)
+              val clean = graft.expr.TextHash.removeCharSpans(text, starts.toArray, k)
+              (docId, Some(nChars),
+                Some(nChars - clean.codePointCount(0, clean.length)), clean)
             }
           }
-          .toDF("doc_id", "n_chars", "n_removed", "clean_text")
-          .write.mode("append").parquet(outPath)
-        // char-granular triggers carry the largest summaries of the
-        // family — destroy eagerly once the write has consumed them
-        finally Seq(bcHs, bcDoc, bcPos, bcSeen).foreach(_.destroy())
-      }
+        }
+        .toDF("doc_id", "n_chars", "n_removed", "clean_text")
+        .write.mode("append").parquet(outPath)
+      // char-granular triggers carry the largest summaries of the
+      // family — destroy eagerly once the write has consumed them
+      finally Seq(bcHs, bcDoc, bcPos, bcSeen).foreach(_.destroy())
       KgramStreamCore.commitFresh(state, sum, seen, batchId, spark)
       KgramStreamCore.advanceHwm(outPath, sum.range)
       sum.touched

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming PSI drift — t25's monitor on the ingest path: the current
   * snapshot's feature histogram accumulates per micro-batch against a
@@ -20,48 +19,22 @@ import org.apache.spark.sql.functions._
   * loudly. */
 object StreamPsi {
 
-  private def currentGen(stateDir: String): Option[String] =
-    GenManifest.currentGen(stateDir)
-
   /** Fold one (doc_id, bin) micro-batch into the current-side histogram. */
   def applyBatch(stateDir: String, batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(stateDir))
     val b = batch.select(col("doc_id"), col("bin")).cache()
-    try {
-      val range = b.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      if (range.isNullAt(0)) return
-      val (lo, hi) = (range.getLong(0), range.getLong(1))
-      if (GenManifest.isRedelivery(stateDir, lo, hi,
-        "additive histogram counts must not re-fold")) return
+    try GenFold.ordered(stateDir, b, "doc_id",
+      "additive histogram counts must not re-fold").foreach { f =>
       val batchCounts = b.groupBy(col("bin")).agg(count(lit(1)).as("n_cur"))
-      val prior = currentGen(stateDir)
-        .map(g => graft.core.ParquetOnce.read(spark, s"gen:$stateDir", s"$stateDir/$g"))
-      val next = (prior match {
-        case Some(p) => p.unionByName(batchCounts)
-        case None => batchCounts
-      }).groupBy(col("bin")).agg(sum(col("n_cur")).as("n_cur"))
-      val gen = s"g$batchId"
-      val prevGen = currentGen(stateDir)
-      graft.core.ParquetOnce.seed(s"gen:$stateDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$stateDir/$gen")
-      GenManifest.commit(stateDir, gen, lo, hi)
-      prevGen.filter(_ != gen).foreach { g =>
-        def rm(f: java.io.File): Unit = {
-          val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-        }
-        rm(Paths.get(stateDir, g).toFile)
-      }
+      f.commit(batchId, (f.prior.toSeq :+ batchCounts).reduce(_ unionByName _)
+        .groupBy(col("bin")).agg(sum(col("n_cur")).as("n_cur")))
     } finally { b.unpersist(blocking = false); () }
   }
 
   /** The drift summary against a reference (doc_id-free) binned frame —
     * the t25 output shape, computed on the standing histogram. */
   def summary(spark: SparkSession, stateDir: String, ref: DataFrame): DataFrame = {
-    val cur = currentGen(stateDir) match {
-      case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$stateDir", s"$stateDir/$g")
-      case None => throw new IllegalStateException("no PSI state committed yet")
-    }
+    val cur = GenFold.current(spark, stateDir)
+      .getOrElse(throw new IllegalStateException("no PSI state committed yet"))
     val refCounts = ref.groupBy(col("bin")).agg(count(lit(1)).as("n_ref"))
     graft.ops.CorpusStats.psiFromCounts(refCounts, cur)
   }
@@ -69,18 +42,8 @@ object StreamPsi {
   /** Convenience drain over an ordered (doc_id, bin) log. */
   def drain(spark: SparkSession, stateDir: String, ref: DataFrame,
             inPath: String, ckptPath: String): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", "long").add("bin", "long")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(stateDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType().add("doc_id", "long").add("bin", "long"),
+      inPath, ckptPath)((b, id) => applyBatch(stateDir, b, id))
     summary(spark, stateDir, ref)
   }
 }

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming quota admission — p07's exact per-class budget as an
   * ingestion gate: admit a document iff its class's quota is not yet
@@ -27,31 +26,18 @@ import org.apache.spark.sql.functions._
   * size, state I/O ∝ |classes|. */
 object StreamQuota {
 
-  private def currentGen(stateDir: String): Option[String] =
-    GenManifest.currentGen(stateDir)
-
   /** Fold one (doc_id, cls) micro-batch: append admitted rows
     * (doc_id, cls, adm_rk) to `outPath`, advance the counters. */
   def applyBatch(stateDir: String, quotas: Map[String, Long],
                  batch: DataFrame, outPath: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(stateDir))
     val b = batch.select(col("doc_id"), col("cls")).cache()
-    try {
-      val range = b.agg(min(col("doc_id")), max(col("doc_id"))).head()
-      if (range.isNullAt(0)) return
-      val (lo, hi) = (range.getLong(0), range.getLong(1))
-      if (GenManifest.isRedelivery(stateDir, lo, hi,
-        "first-come admission equals the batch operator only under " +
-          "ascending doc_id arrival")) return // already admitted: skip
-
+    try GenFold.ordered(stateDir, b, "doc_id",
+      "first-come admission equals the batch operator only under " +
+        "ascending doc_id arrival").foreach { f =>
       // within-batch first-come rank per class (trigger-sized window)
       val w = Window.partitionBy(col("cls")).orderBy(col("doc_id"))
       val ranked = b.withColumn("_rk", row_number().over(w))
-
-      val prior = currentGen(stateDir)
-        .map(g => graft.core.ParquetOnce.read(spark, s"gen:$stateDir", s"$stateDir/$g"))
-      val withPrior = prior match {
+      val withPrior = f.prior match {
         case Some(p) => ranked.join(broadcast(p), Seq("cls"), "left")
           .withColumn("_n0", coalesce(col("n_adm"), lit(0L))).drop("n_adm")
         case None => ranked.withColumn("_n0", lit(0L))
@@ -69,29 +55,15 @@ object StreamQuota {
         // replayed batch (crash after this write, before the manifest
         // commit) recomputes against the UNCHANGED counters and rewrites
         // the identical rows instead of appending duplicates
-        admitted.write.mode("overwrite").parquet(s"$outPath/adm_lo=$lo")
+        admitted.write.mode("overwrite").parquet(s"$outPath/adm_lo=${f.lo}")
 
         val batchCounts = admitted.groupBy(col("cls"))
           .agg(count(lit(1)).as("n_adm"))
-        val next = (prior match {
-          case Some(p) => p.unionByName(batchCounts)
-          case None => batchCounts
-        }).groupBy(col("cls")).agg(sum(col("n_adm")).as("n_adm"))
-        val gen = s"g$batchId"
-        val prevGen = currentGen(stateDir)
-        graft.core.ParquetOnce.seed(s"gen:$stateDir", next.schema)
-        next.write.mode("overwrite").parquet(s"$stateDir/$gen")
-
-        // ONE atomic commit point carrying gen + hwm, AFTER the output
-        // lands: earlier crashes replay into the idempotent overwrite
-        // above, later ones are detected redeliveries and skipped
-        GenManifest.commit(stateDir, gen, lo, hi)
-        prevGen.filter(_ != gen).foreach { g =>
-          def rm(f: java.io.File): Unit = {
-            val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(); ()
-          }
-          rm(Paths.get(stateDir, g).toFile)
-        }
+        // the commit lands AFTER the output: earlier crashes replay into
+        // the idempotent overwrite above, later ones are detected
+        // redeliveries and skipped
+        f.commit(batchId, (f.prior.toSeq :+ batchCounts).reduce(_ unionByName _)
+          .groupBy(col("cls")).agg(sum(col("n_adm")).as("n_adm")))
       } finally { admitted.unpersist(blocking = false); () }
     } finally { b.unpersist(blocking = false); () }
   }
@@ -100,19 +72,8 @@ object StreamQuota {
     * through [[applyBatch]], return the accumulated admitted rows. */
   def drain(spark: SparkSession, stateDir: String, quotas: Map[String, Long],
             inPath: String, outPath: String, ckptPath: String): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", "long").add("cls", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(stateDir, quotas, b, outPath, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType().add("doc_id", "long").add("cls", "string"),
+      inPath, ckptPath)((b, id) => applyBatch(stateDir, quotas, b, outPath, id))
     // drop the batch-tag partition column — consumers see the same
     // (doc_id, cls, adm_rk) shape as before the idempotent-output fix
     spark.read.parquet(outPath).select(col("doc_id"), col("cls"), col("adm_rk"))

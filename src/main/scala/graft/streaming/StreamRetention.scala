@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming retention cohorts — the q21 cohort/offset matrix maintained
   * incrementally over an unbounded event stream.
@@ -68,18 +69,8 @@ object StreamRetention {
     * [[applyBatch]], return the final matrix. */
   def drain(spark: SparkSession, state: DocStateStore, inPath: String,
             ckptPath: String): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("user_id", "long").add("day", "long")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(state, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType().add("user_id", "long").add("day", "long"),
+      inPath, ckptPath)((b, id) => applyBatch(state, b, id))
     summary(state)
   }
 }

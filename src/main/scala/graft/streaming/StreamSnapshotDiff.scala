@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming snapshot diff — the re-crawl triage (batch d20) maintained
   * incrementally: the standing corpus loads ONCE into a bucketed
@@ -150,19 +151,9 @@ object StreamSnapshotDiff {
   def drain(spark: SparkSession, baseline: DocStateStore, verdicts: DocStateStore,
             inPath: String, ckptPath: String, n: Int = 3,
             threshold: Double = 0.5): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", "long").add("text", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(
-          applyBatch(baseline, verdicts, b, id, "doc_id", "text", n, threshold)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType().add("doc_id", "long").add("text", "string"),
+      inPath, ckptPath)((b, id) =>
+        applyBatch(baseline, verdicts, b, id, "doc_id", "text", n, threshold))
     summary(baseline, verdicts)
   }
 }

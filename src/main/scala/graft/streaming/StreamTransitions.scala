@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming transition matrix — q22's first-order Markov edge counts
   * maintained incrementally over an unbounded event stream.
@@ -72,7 +73,7 @@ object StreamTransitions {
           "cannot be placed")
       val lo = census.map(_.getAs[Long]("lo")).min
       val hi = census.map(_.getAs[Long]("hi")).max
-      if (GenMeta.isRedelivery(lasts, Ns, countsDir, lo, hi,
+      if (GenMeta.isRedelivery(lasts, Ns, lo, hi,
         "additive edge counts equal the batch operator only under " +
           "ascending event_id arrival")) return // already folded: skip
 
@@ -101,12 +102,10 @@ object StreamTransitions {
       // fold the counts generation (≤ types² rows, constant in stream length)
       val parts = Seq(Some(inner),
         if (boundary.columns.nonEmpty) Some(boundary) else None,
-        GenMeta.currentGen(lasts, Ns, countsDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$countsDir", s"$countsDir/$g"))).flatten
+        GenMeta.currentGen(lasts, Ns).map(GenFold.scan(spark, countsDir, _))).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("from_type"), col("to_type")).agg(sum(col("n")).as("n"))
-      val gen = s"g$batchId"
-      graft.core.ParquetOnce.seed(s"gen:$countsDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$countsDir/$gen")
+      val gen = GenFold.write(countsDir, batchId, next)
 
       // per-user lasts: the batch endpoint always supersedes (ascending
       // arrival), so union + max-by-event_id is the exact fold
@@ -133,8 +132,8 @@ object StreamTransitions {
 
   /** The standing edge matrix — q22's output shape. */
   def summary(spark: SparkSession, lasts: DocStateStore, countsDir: String): DataFrame =
-    GenMeta.currentGen(lasts, Ns, countsDir) match {
-      case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$countsDir", s"$countsDir/$g")
+    GenMeta.currentGen(lasts, Ns) match {
+      case Some(g) => GenFold.scan(spark, countsDir, g)
         .select(col("from_type"), col("to_type"), col("n"))
       case None => throw new IllegalStateException("no transition state committed yet")
     }
@@ -142,18 +141,9 @@ object StreamTransitions {
   /** Convenience drain over a (user_id, event_id, event_type) log. */
   def drain(spark: SparkSession, lasts: DocStateStore, countsDir: String,
             inPath: String, ckptPath: String): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("user_id", "long").add("event_id", "long").add("event_type", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(lasts, countsDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType()
+      .add("user_id", "long").add("event_id", "long").add("event_type", "string"),
+      inPath, ckptPath)((b, id) => applyBatch(lasts, countsDir, b, id))
     summary(spark, lasts, countsDir)
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming UNIQUE-TOKEN accounting — the p37/p40 input (how many
   * tokens of NEVER-SEEN-BEFORE content each source has contributed)
@@ -70,7 +71,7 @@ object StreamUniqueTokens {
           "ordering key of the ascending-arrival contract; null docs " +
           "cannot be placed")
       val (lo, hi) = (rm("lo").asInstanceOf[Long], rm("hi").asInstanceOf[Long])
-      if (GenMeta.isRedelivery(seen, Ns, aggDir, lo, hi,
+      if (GenMeta.isRedelivery(seen, Ns, lo, hi,
         "first-copy credit equals the batch min-doc_id rule only under " +
           "ascending doc_id arrival")) return // already folded: skip
       val freshObs = org.apache.spark.sql.Observation()
@@ -89,15 +90,13 @@ object StreamUniqueTokens {
           coalesce(col("raw_tokens"), lit(0L)).as("raw_tokens"),
           coalesce(col("unique_tokens"), lit(0L)).as("unique_tokens"))
       val parts = Seq(Some(batchAgg),
-        GenMeta.currentGen(seen, Ns, aggDir).map(g => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g"))).flatten
+        GenMeta.currentGen(seen, Ns).map(GenFold.scan(spark, aggDir, _))).flatten
       val next = parts.reduce(_ unionByName _)
         .groupBy(col("source"))
         .agg(sum(col("raw_tokens")).as("raw_tokens"),
           sum(col("unique_tokens")).as("unique_tokens"))
-      val gen = s"g$batchId"
       // job 2 — generation write (materializes fresh's cache)
-      graft.core.ParquetOnce.seed(s"gen:$aggDir", next.schema)
-      next.write.mode("overwrite").parquet(s"$aggDir/$gen")
+      val gen = GenFold.write(aggDir, batchId, next)
 
       // THE commit point: the seen-set delta, the counters' generation
       // pointer, and the hwm advance in ONE txn entry ([[GenMeta]]) — a
@@ -143,8 +142,8 @@ object StreamUniqueTokens {
 
   /** The standing accounting — (source, raw, unique, stale_ppm). */
   def summary(spark: SparkSession, seen: DocStateStore, aggDir: String): DataFrame =
-    GenMeta.currentGen(seen, Ns, aggDir) match {
-      case Some(g) => graft.core.ParquetOnce.read(spark, s"gen:$aggDir", s"$aggDir/$g")
+    GenMeta.currentGen(seen, Ns) match {
+      case Some(g) => GenFold.scan(spark, aggDir, g)
         .withColumn("stale_ppm", expr(
           "CASE WHEN raw_tokens = 0 THEN 0L " +
             "ELSE ((raw_tokens - unique_tokens) * 1000000L) div raw_tokens END"))
@@ -155,18 +154,9 @@ object StreamUniqueTokens {
   /** Convenience drain over a (doc_id, source, text) log. */
   def drain(spark: SparkSession, seen: DocStateStore, aggDir: String,
             inPath: String, ckptPath: String): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", "long").add("source", "string").add("text", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(seen, aggDir, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType()
+      .add("doc_id", "long").add("source", "string").add("text", "string"),
+      inPath, ckptPath)((b, id) => applyBatch(seen, aggDir, b, id))
     summary(spark, seen, aggDir)
   }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Streaming VOCABULARY census — exact per-(group, term) occurrence
   * counts maintained incrementally, serving t32's missing-mass report
@@ -68,7 +67,7 @@ object StreamVocab {
         }
       if (loN == null) return // empty batch: nothing arrived
       val (lo, hi) = (loN.asInstanceOf[Long], hiN.asInstanceOf[Long])
-      if (GenMeta.isRedelivery(state, Ns, state.stateDir, lo, hi,
+      if (GenMeta.isRedelivery(state, Ns, lo, hi,
         "additive term counts equal the batch census only under " +
           "ascending doc_id arrival")) return // already folded: skip
       val merged =
@@ -87,11 +86,6 @@ object StreamVocab {
       // kv-only entry so the hwm advances.
       state.commitWithMeta(merged, f"r$batchId%010d", touched,
         Map(s"$Ns.hwm" -> s"$lo,$hi"))
-      // the store meta now owns the hwm: drop the pre-fuse filesystem
-      // sibling so it can never resurrect an ancient mark if the state
-      // is ever rebuilt in place (mirrors GenMeta.sweep's cleanup)
-      Files.deleteIfExists(Paths.get(state.stateDir, "_hwm"))
-      ()
     } finally { (b :: cached).foreach(_.unpersist(blocking = false)); () }
   }
 
@@ -109,18 +103,9 @@ object StreamVocab {
   /** Convenience drain over a (doc_id, grp, text) log. */
   def drain(spark: SparkSession, state: TxnLogState, inPath: String,
             ckptPath: String): DataFrame = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", "long").add("grp", "string").add("text", "string")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inPath)
-      .writeStream
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        TriggerScope.scoped(b)(applyBatch(state, b, id)) }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", ckptPath)
-      .start()
-    q.awaitTermination()
+    Drain.run(spark, new StructType()
+      .add("doc_id", "long").add("grp", "string").add("text", "string"),
+      inPath, ckptPath)((b, id) => applyBatch(state, b, id))
     summary(state)
   }
 }

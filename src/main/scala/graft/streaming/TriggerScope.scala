@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 /** Per-trigger SQL-conf scoping for foreachBatch drains (the
   * [[StreamNovelty]] discipline, shared): shuffle width proportional to
@@ -40,4 +42,25 @@ object TriggerScope {
       sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
   }
+}
+
+/** The one drain loop every foreachBatch monitor shares: an ordered
+  * parquet log is read one file per trigger, each micro-batch runs
+  * `perBatch` under [[TriggerScope.scoped]], and the query drains what
+  * is there (`AvailableNow`) and returns once it has. The checkpoint
+  * makes the drain resumable: a rerun over the same `ckptPath` only
+  * sees files that arrived since. */
+object Drain {
+
+  def run(spark: SparkSession, schema: StructType, inPath: String, ckptPath: String)
+         (perBatch: (DataFrame, Long) => Unit): Unit =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(inPath)
+      .writeStream
+      .foreachBatch { (b: DataFrame, id: Long) => TriggerScope.scoped(b)(perBatch(b, id)) }
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", ckptPath)
+      .start()
+      .awaitTermination()
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** The seen-gram fold is set union — idempotent and commutative — so
   * ANY chunking, arrival order, or redelivery must yield exactly the
@@ -62,9 +62,14 @@ class StreamGramCoverageSpec extends SparkSpec {
       val n = StreamGramCoverage.readState(spark, s"$work/state").get.count()
       assert(n <= bound, s"state $n exceeds probe gram count $bound")
     }
-    // only one generation survives (superseded ones vacuumed)
-    val gens = new java.io.File(s"$work/state").listFiles()
-      .map(_.getName).filter(_.startsWith("g"))
-    assert(gens.length == 1, gens.mkString(","))
+    // superseded generations are doomed, then reclaimed once the grace
+    // window has passed: only the live one survives
+    def gens = new java.io.File(s"$work/state").listFiles()
+      .map(_.getName).filter(_.startsWith("g")).sorted.toSeq
+    val live = GenManifest.currentGen(s"$work/state").get
+    assert(gens.filter(g => !Files.exists(Paths.get(s"$work/state", g, "_doomed"))) == Seq(live),
+      gens.mkString(","))
+    GenMeta.sweep(s"$work/state", keep = live, graceMs = 0L)
+    assert(gens == Seq(live), gens.mkString(","))
   }
 }

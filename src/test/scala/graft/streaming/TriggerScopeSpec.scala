@@ -69,6 +69,8 @@ class TriggerScopeSpec extends SparkSpec {
   }
 
   test("the scope reaches a real streaming drain's batch-derived shuffles") {
+    // Drain.run is the loop every foreachBatch monitor runs through, so
+    // this pins that it applies the scope.
     // ADVICE r17: foreachBatch frames are bound to the stream's CLONED
     // session (sparkSessionForStream), so scoping the outer session never
     // reached the batch plans. Pin the fix end-to-end: widen the parent
@@ -87,24 +89,16 @@ class TriggerScopeSpec extends SparkSpec {
       @volatile var parentDuring: String = null
       val schema = new org.apache.spark.sql.types.StructType()
         .add("doc_id", "long").add("text", "string")
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(s"$work/log")
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          TriggerScope.scoped(b) {
-            scopedWidth = b.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-            // a real exchange planned inside the scope (AQE is off there,
-            // so the shuffle's partition count IS the scoped conf)
-            shufflePartitions =
-              b.groupBy(org.apache.spark.sql.functions.col("text")).count()
-                .rdd.getNumPartitions
-            parentDuring = spark.conf.get("spark.sql.shuffle.partitions")
-          }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
+      // no scope spelled here: Drain.run must apply it to every trigger
+      Drain.run(spark, schema, s"$work/log", s"$work/ckpt") { (b, _) =>
+        scopedWidth = b.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+        // a real exchange planned inside the scope (AQE is off there,
+        // so the shuffle's partition count IS the scoped conf)
+        shufflePartitions =
+          b.groupBy(org.apache.spark.sql.functions.col("text")).count()
+            .rdd.getNumPartitions
+        parentDuring = spark.conf.get("spark.sql.shuffle.partitions")
+      }
       assert(scopedWidth === 4, "a 1-split trigger must plan at the floor width 4")
       assert(shufflePartitions === 4,
         "the batch-derived groupBy must shuffle at trigger width, not session width")
