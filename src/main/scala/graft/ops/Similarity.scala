@@ -410,10 +410,15 @@ object Similarity {
 
   /** Reclaim assignment generations the pointer no longer names, older
     * than `graceMs` (in-flight readers may still scan a just-superseded
-    * generation — the engine's universal vacuum contract). */
+    * generation — the engine's universal vacuum contract). The pointer
+    * is whichever manifest the index carries: `IVFPQ` for the PQ-coded
+    * and residual indexes, `CODEBOOK` otherwise. */
   def vacuumIvfIndex(dir: String, graceMs: Long = 10 * 60 * 1000L): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val live = java.nio.file.Paths.get(assignmentDir(dir)).getFileName.toString
+    val live =
+      if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "IVFPQ")))
+        resolveIvfPqIndex(dir)._3
+      else java.nio.file.Paths.get(assignmentDir(dir)).getFileName.toString
     val cutoff = System.currentTimeMillis() - graceMs
     val root = java.nio.file.Paths.get(dir)
     val fs = java.nio.file.Files.list(root)

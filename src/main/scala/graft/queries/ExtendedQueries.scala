@@ -70,6 +70,19 @@ object ExtendedQueries {
       in
     })
 
+  /** The streaming ANN ingest of s08/s18/s26: seed the index at `work`
+    * with the even vectors (`build`), drain the odd ones through `append`
+    * one file per trigger, then serve the first five as queries. */
+  private def streamIngest(s: SparkSession, corpus: DataFrame, work: String)(
+      build: DataFrame => Unit, append: DataFrame => Unit,
+      serve: DataFrame => DataFrame): DataFrame = {
+    build(corpus.filter(col("vec_id") % 2 === 0))
+    corpus.filter(col("vec_id") % 2 === 1)
+      .coalesce(2).write.mode("overwrite").parquet(s"$work/incoming")
+    graft.streaming.Drain.run(s, corpus.schema, s"$work/incoming", s"$work/ckpt")((b, _) => append(b))
+    serve(corpus.filter(col("vec_id") < 5)).orderBy(col("q_id"), col("rk"))
+  }
+
   /** FREEZE a derived frame before handing it to a streaming drain: a
     * DataFrame captured in a `foreachBatch` closure (or the static side
     * of a stream-static join) is RE-EXECUTED from its source on every
@@ -1490,24 +1503,8 @@ object ExtendedQueries {
       val corpus = Similarity.prep(t(s, dir, "embeddings"), "vec_id", "embedding")
       val work = scratchDir("graft_s08")
       val cents = Similarity.trainCentroids(corpus, 8, 2)
-      Similarity.buildIvfIndex(corpus.filter(col("vec_id") % 2 === 0), work,
-        codebook = Some(cents))
-      corpus.filter(col("vec_id") % 2 === 1)
-        .coalesce(2).write.mode("overwrite").parquet(s"$work/incoming")
-      val q = s.readStream
-        .schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1) // several genuine micro-batches
-        .parquet(s"$work/incoming")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Similarity.appendToIvfIndex(batch, work)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
-      Similarity.ivfIndexTopK(s, work, corpus.filter(col("vec_id") < 5), k = 5, nProbe = 2)
-        .orderBy(col("q_id"), col("rk"))
+      streamIngest(s, corpus, work)(Similarity.buildIvfIndex(_, work, codebook = Some(cents)),
+        Similarity.appendToIvfIndex(_, work), Similarity.ivfIndexTopK(s, work, _, k = 5))
     }),
 
     // streaming COMPRESSED-index ingest: s08 for the IVF-PQ index —
@@ -1519,24 +1516,9 @@ object ExtendedQueries {
       val corpus = Similarity.prep(t(s, dir, "embeddings"), "vec_id", "embedding")
       val work = scratchDir("graft_s18")
       val (co, bo) = Similarity.trainIvfPq(corpus, 8, m = 4, dim = 64, ksub = 8, trainIters = 2)
-      Similarity.buildIvfPqIndex(corpus.filter(col("vec_id") % 2 === 0), work,
-        coarse = Some(co), books = Some(bo))
-      corpus.filter(col("vec_id") % 2 === 1)
-        .coalesce(2).write.mode("overwrite").parquet(s"$work/incoming")
-      val q = s.readStream
-        .schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$work/incoming")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Similarity.appendToIvfPqIndex(batch, work)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
-      Similarity.ivfPqIndexTopK(s, work, corpus.filter(col("vec_id") < 5), k = 5, nProbe = 2)
-        .orderBy(col("q_id"), col("rk"))
+      streamIngest(s, corpus, work)(
+        Similarity.buildIvfPqIndex(_, work, coarse = Some(co), books = Some(bo)),
+        Similarity.appendToIvfPqIndex(_, work), Similarity.ivfPqIndexTopK(s, work, _, k = 5))
     }),
 
     // s18 on the RESIDUAL index: the mode-aware append reads the
@@ -1548,24 +1530,9 @@ object ExtendedQueries {
       val corpus = Similarity.prep(t(s, dir, "embeddings"), "vec_id", "embedding")
       val work = scratchDir("graft_s26")
       val (co, bo) = Similarity.trainIvfRpq(corpus, 8, m = 4, dim = 64, ksub = 8)
-      Similarity.buildIvfRpqIndex(corpus.filter(col("vec_id") % 2 === 0), work,
-        coarse = Some(co), books = Some(bo))
-      corpus.filter(col("vec_id") % 2 === 1)
-        .coalesce(2).write.mode("overwrite").parquet(s"$work/incoming")
-      val q = s.readStream
-        .schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$work/incoming")
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          Similarity.appendToIvfPqIndex(batch, work)
-        }
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
-      Similarity.ivfPqIndexTopK(s, work, corpus.filter(col("vec_id") < 5), k = 5, nProbe = 2)
-        .orderBy(col("q_id"), col("rk"))
+      streamIngest(s, corpus, work)(
+        Similarity.buildIvfRpqIndex(_, work, coarse = Some(co), books = Some(bo)),
+        Similarity.appendToIvfPqIndex(_, work), Similarity.ivfPqIndexTopK(s, work, _, k = 5))
     }),
 
     // streaming FUZZY contamination gate (p14's stream twin): per-doc

@@ -2184,19 +2184,11 @@ object PipelineQueries {
         Thread.sleep(20)
       }
       val outDir = s"$work/out"
-      val q = s.readStream.schema(tracks.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$work/log")
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          Multimodal.clipMatchesPrepared(b, clips, windowSamples = 4, k = 4)
-            .write.mode("append").parquet(outDir); ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
-      s.read.parquet(outDir).orderBy(col("clip_id"), col("track_id"))
+      graft.streaming.Drain.run(s, tracks.schema, s"$work/log", s"$work/ckpt") { (b, id) =>
+        graft.streaming.Drain.writeBatch(
+          Multimodal.clipMatchesPrepared(b, clips, windowSamples = 4, k = 4), outDir, id)
+      }
+      graft.streaming.Drain.readLog(s.read, outDir).orderBy(col("clip_id"), col("track_id"))
     }),
 
     // d22's stream twin: each arriving corpus chunk probes the FROZEN
@@ -2225,20 +2217,11 @@ object PipelineQueries {
         Thread.sleep(20)
       }
       val outDir = s"$work/out"
-      val q = s.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$work/log")
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          Dedup.editContaminationIndexed(b, benchIdx, "doc_id", "text",
-              k = 8, minOverlap = 0.25, editSim = 0.8, maxDist = 200)
-            .write.mode("append").parquet(outDir); ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$work/ckpt")
-        .start()
-      q.awaitTermination()
-      s.read.parquet(outDir).orderBy(col("doc_id"), col("bench_id"))
+      graft.streaming.Drain.run(s, d.schema, s"$work/log", s"$work/ckpt") { (b, id) =>
+        graft.streaming.Drain.writeBatch(Dedup.editContaminationIndexed(b, benchIdx,
+          "doc_id", "text", k = 8, minOverlap = 0.25, editSim = 0.8, maxDist = 200), outDir, id)
+      }
+      graft.streaming.Drain.readLog(s.read, outDir).orderBy(col("doc_id"), col("bench_id"))
     }),
 
     // streaming PERCEPTUAL admission: arriving images are rejected when

@@ -22,6 +22,7 @@ import graft.core.ParquetOnce
   * range and skipped. Superseded generations are reclaimed by
   * [[GenMeta.sweep]] — the same two-phase grace-window protocol the
   * dual-state monitors use.
+  * Every ordered drain applies the ONE arrival rule, [[arrival]].
   */
 object GenManifest {
 
@@ -39,19 +40,24 @@ object GenManifest {
   /** The live generation name (directory under `dir`), None when empty. */
   def currentGen(dir: String): Option[String] = read(dir).map(_._1)
 
-  /** The ascending-arrival contract check. Returns TRUE when the batch
-    * is a bit-exact redelivery of the newest committed one (same lo/hi —
-    * already folded, the caller must skip it); throws on any other
-    * overlap with the high-water mark; returns false for a fresh batch. */
-  def isRedelivery(dir: String, lo: Long, hi: Long, contract: String): Boolean =
-    read(dir) match {
-      case Some((_, pl, ph)) if lo == pl && hi == ph => true
-      case Some((_, _, ph)) if lo <= ph =>
+  /** THE arrival rule, wherever the previous (lo, hi) mark lives: TRUE
+    * when the batch is a bit-exact redelivery of the newest committed
+    * one (skip it); throws on any other overlap, naming `contract`;
+    * false for a fresh batch. */
+  private[streaming] def arrival(prev: Option[(Long, Long)], lo: Long, hi: Long,
+                                 contract: String): Boolean =
+    prev match {
+      case Some((pl, ph)) if lo == pl && hi == ph => true
+      case Some((_, ph)) if lo <= ph =>
         throw new IllegalStateException(
           s"out-of-order arrival: batch range [$lo, $hi] overlaps the " +
             s"high-water mark $ph — $contract")
       case _ => false
     }
+
+  /** [[arrival]] against the mark in this manifest. */
+  def isRedelivery(dir: String, lo: Long, hi: Long, contract: String): Boolean =
+    arrival(read(dir).map { case (_, pl, ph) => (pl, ph) }, lo, hi, contract)
 
   /** THE commit point: generation pointer and hwm land in one atomic move. */
   def commit(dir: String, gen: String, lo: Long, hi: Long): Unit =
@@ -136,7 +142,8 @@ object GenFold {
   * [[DocStateStore.stateMeta]] keys (Delta's `txn` action, re-expressed):
   * ONE put-if-absent txn entry (or CURRENT flip) advances the per-key
   * delta, the rollup pointer, and the redelivery range together — no
-  * ordering of filesystem writes can tear them apart.
+  * ordering of filesystem writes can tear them apart (the keep-first
+  * gates commit their [[hwm]] the same way).
   *
   * Both variants reclaim superseded generations through ONE protocol,
   * [[sweep]]. */
@@ -146,25 +153,20 @@ object GenMeta {
   def currentGen(store: DocStateStore, ns: String): Option[String] =
     store.stateMeta(s"$ns.gen")
 
-  /** Ascending-arrival check against the store-resident hwm: true = the
-    * batch is a bit-exact redelivery of the newest committed one (skip
-    * it); throws on any other overlap; false = fresh batch. */
+  /** [[GenManifest.arrival]] against the store-resident mark of `ns`. */
   def isRedelivery(store: DocStateStore, ns: String,
                    lo: Long, hi: Long, contract: String): Boolean =
-    store.stateMeta(s"$ns.hwm")
-      .map { h => val Array(pl, ph) = h.split(",").map(_.toLong); (pl, ph) } match {
-      case Some((pl, ph)) =>
-        if (lo == pl && hi == ph) true
-        else if (lo <= ph) throw new IllegalStateException(
-          s"out-of-order arrival: batch range [$lo, $hi] overlaps the " +
-            s"high-water mark $ph — $contract")
-        else false
-      case None => false
-    }
+    GenManifest.arrival(store.stateMeta(s"$ns.hwm")
+      .map { h => val Array(pl, ph) = h.split(",").map(_.toLong); (pl, ph) },
+      lo, hi, contract)
 
-  /** The meta entries a monitor attaches to its store commit. */
+  /** The high-water-mark entry a monitor attaches to its store commit. */
+  def hwm(ns: String, lo: Long, hi: Long): Map[String, String] =
+    Map(s"$ns.hwm" -> s"$lo,$hi")
+
+  /** [[hwm]] plus the rollup generation pointer. */
   def kv(ns: String, gen: String, lo: Long, hi: Long): Map[String, String] =
-    Map(s"$ns.gen" -> gen, s"$ns.hwm" -> s"$lo,$hi")
+    hwm(ns, lo, hi) + (s"$ns.gen" -> gen)
 
   /** Reclaim superseded `g*` generation directories under `aggDir` —
     * called AFTER the commit, so a crash before it merely leaks a dir

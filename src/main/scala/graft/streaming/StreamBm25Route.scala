@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Stateless like the other frozen-model gates (s14 NB, s15 DSIR): a
   * doc's routes depend only on its own tokens and the frozen stats, so
-  * no cross-batch state, no ordering contract, and at-least-once
-  * redelivery re-emits identical verdicts. Freezing df/avgdl is also
+  * no cross-batch state and no ordering contract; a redelivered batch
+  * overwrites its own batch partition of the route log. Freezing df/avgdl is also
   * what keeps scores COMPARABLE across the stream — live stats would
   * re-rank yesterday's routes every trigger.
   *
@@ -23,22 +23,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * corpus-sized on the stream's cadence. */
 object StreamBm25Route {
 
-  /** Score one micro-batch against the frozen query set and append the
-    * positive routes to `outPath`. */
+  /** Score one micro-batch against the frozen query set and log the
+    * positive routes under `outPath`. */
   def applyBatch(batch: DataFrame, queries: Seq[(Long, Seq[String])],
                  df: Map[String, Long], nDocs: Long, totalTokens: Long,
-                 outPath: String): Unit =
-    graft.ops.Search
-      .bm25Scores(batch, "doc_id", "text", queries, df, nDocs, totalTokens)
-      .write.mode("append").parquet(outPath)
+                 outPath: String, batchId: Long): Unit =
+    Drain.writeBatch(graft.ops.Search
+      .bm25Scores(batch, "doc_id", "text", queries, df, nDocs, totalTokens), outPath, batchId)
 
   /** Convenience drain: stream a document log through [[applyBatch]],
     * return the accumulated routes. */
   def drain(spark: SparkSession, queries: Seq[(Long, Seq[String])],
             df: Map[String, Long], nDocs: Long, totalTokens: Long,
-            inPath: String, outPath: String, ckptPath: String): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, q_id long, score_q long") {
-      (b, _) => applyBatch(b, queries, df, nDocs, totalTokens, outPath)
+            inPath: String, outPath: String, ckptPath: String): DataFrame = {
+    Drain.run(spark, KgramStreamCore.DocLog, inPath, ckptPath) {
+      (b, id) => applyBatch(b, queries, df, nDocs, totalTokens, outPath, id)
     }
+    Drain.readLog(spark.read.schema("doc_id long, q_id long, score_q long"), outPath)
+  }
 }

@@ -46,7 +46,6 @@ object StreamClusterQuota {
       .add("vec_id", "long").add("embedding", "array<float>"),
       inPath, ckptPath)((b, id) =>
         applyBatch(b, "vec_id", "embedding", cents, quotas, stateDir, outPath, id))
-    // drop the batch-tag partition column (StreamQuota's idempotent output)
-    spark.read.parquet(outPath).select(col("doc_id"), col("cls"), col("adm_rk"))
+    Drain.readLog(spark.read, outPath)
   }
 }

@@ -13,8 +13,8 @@ import graft.ops.Similarity.Centroid
   * the retrain alarm fires WHILE the index drifts, not at the next
   * offline audit.
   *
-  * Fold contract: each trigger appends one batch-keyed report row
-  * `(batch_id, n_vecs, sum_fit_q, n_low)` — counts and micro-unit sums
+  * Fold contract: each trigger logs one report row (a replay overwrites
+  * it) `(batch_id, n_vecs, sum_fit_q, n_low)` — counts and micro-unit sums
   * are ADDITIVE over the disjoint triggers (exact integers, order-free),
   * so the drained summary equals the batch a20 aggregate over the same
   * vectors exactly. The per-trigger cost is one map-only scan of the
@@ -26,25 +26,24 @@ import graft.ops.Similarity.Centroid
   * happen. */
 object StreamDrift {
 
-  /** Score one micro-batch (in [[Similarity.prep]] shape) and append
-    * its batch-keyed report row. */
+  /** Score one micro-batch (in [[Similarity.prep]] shape) and write its
+    * report row as batch `batchId` of `outDir`. */
   def applyBatch(outDir: String, cents: Seq[Centroid], batch: DataFrame,
                  batchId: Long, lowFit: Double = 0.5): Unit = {
     val lowQ = math.round(lowFit * 1e6)
-    batch.select(Similarity.bestFitQ(cents).as("fit_q"))
+    Drain.writeBatch(batch.select(Similarity.bestFitQ(cents).as("fit_q"))
       .agg(count(lit(1)).as("n_vecs"),
         sum(col("fit_q")).as("sum_fit_q"),
         sum(when(col("fit_q") < lowQ, 1L).otherwise(0L)).as("n_low"))
       .withColumn("batch_id", lit(batchId))
-      .coalesce(1)
-      .write.mode("append").parquet(outDir)
+      .coalesce(1), outDir, batchId)
   }
 
   /** The drained summary — (n_vecs, mean_fit, p_low), additive over the
     * trigger reports: ≡ the batch [[Similarity.quantizerDrift]] row over
     * the same vectors. */
   def summary(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(outDir)
+    Drain.readLog(spark.read, outDir)
       .agg(sum(col("n_vecs")).as("n_vecs"),
         (sum(col("sum_fit_q")).cast("double") /
           (sum(col("n_vecs")) * lit(1e6))).as("mean_fit"),

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   * Stateless like [[StreamNbGate]] — a verdict depends only on the doc's
   * own features and the frozen model, so no ordering contract, no
-  * high-water mark, idempotent under at-least-once redelivery. Refitting
+  * high-water mark; a replay overwrites its own batch. Refitting
   * per batch would make admission drift with arrival order, which is why
   * [[graft.ops.CorpusStats.dsirTrain]] is split from scoring.
   *
@@ -24,23 +24,23 @@ import org.apache.spark.sql.functions._
 object StreamDsirGate {
 
   /** Score one micro-batch against the frozen (model, consts) pair and
-    * append the ADMITTED documents (logw_q > 0) to `outPath`. */
+    * log the ADMITTED documents (logw_q > 0) under `outPath`. */
   def applyBatch(model: DataFrame, consts: DataFrame, buckets: Int,
                  batch: DataFrame, idCol: String, textCol: String,
-                 outPath: String): Unit =
-    graft.ops.CorpusStats
+                 outPath: String, batchId: Long): Unit =
+    Drain.writeBatch(graft.ops.CorpusStats
       .dsirScore(batch, idCol, textCol, model, consts, buckets)
       .filter(col("logw_q") > 0)
-      .select(col("doc_id"), col("n_feats"), col("logw_q"))
-      .write.mode("append").parquet(outPath)
+      .select(col("doc_id"), col("n_feats"), col("logw_q")), outPath, batchId)
 
   /** Convenience drain: stream an ordered document log through
     * [[applyBatch]], return the accumulated admitted documents. */
   def drain(spark: SparkSession, model: DataFrame, consts: DataFrame,
             buckets: Int, inPath: String, outPath: String,
-            ckptPath: String): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_feats long, logw_q long") {
-      (b, _) => applyBatch(model, consts, buckets, b, "doc_id", "text", outPath)
+            ckptPath: String): DataFrame = {
+    Drain.run(spark, KgramStreamCore.DocLog, inPath, ckptPath) {
+      (b, id) => applyBatch(model, consts, buckets, b, "doc_id", "text", outPath, id)
     }
+    Drain.readLog(spark.read.schema("doc_id long, n_feats long, logw_q long"), outPath)
+  }
 }

@@ -21,10 +21,10 @@ import graft.ops.Multimodal
   * its own band keys hash into, and the probe join is band-bucket
   * confined exactly like the batch pair search. The state is
   * append-only ⇒ delta commits (I/O ∝ trigger). Ascending-id arrival is
-  * ENFORCED against a high-water mark (fate-independence needs every
-  * lower id already seen); bit-exact redelivery is detected by its
-  * (lo, hi) range and skipped. Undecodable payloads (aHash −1) are
-  * admitted unjudged — they are not near-dups of each other. */
+  * ENFORCED against the mark the state commit carries (fate-independence
+  * needs every lower id already seen) — the [[KgramStreamCore]] replay
+  * rule. Undecodable payloads (aHash −1) are admitted unjudged — they
+  * are not near-dups of each other. */
 object StreamMediaGate {
 
   private def bandRows(fps: DataFrame, bands: Int): DataFrame = {
@@ -39,7 +39,7 @@ object StreamMediaGate {
         col("doc_id"), col("phash"))
   }
 
-  /** Fold one media micro-batch: verdicts appended to `outPath`, band
+  /** Fold one media micro-batch: verdicts to `outPath`'s log, band
     * rows of ALL judged images appended to the state. */
   def applyBatch(state: DocStateStore, batch: DataFrame, outPath: String,
                  batchId: Long, maxHamming: Int = 3, grid: Int = 8): Unit = {
@@ -53,16 +53,9 @@ object StreamMediaGate {
       try {
         val (range, touched) = KgramStreamCore.batchStats(
           br, "doc_id", col("id"), state.buckets)
-        if (range.isEmpty) return
-        // bit-exact redelivery (exact range match with the mark) is a
-        // no-op: neither the verdict log nor the state may double-fold
-        val hwmFile = java.nio.file.Paths.get(outPath, "_hwm")
-        if (java.nio.file.Files.exists(hwmFile)) {
-          val Array(pl, ph) = java.nio.file.Files.readString(hwmFile)
-            .trim.split("\t").map(_.toLong)
-          if (range.contains((pl, ph))) return
-        }
-        KgramStreamCore.checkAscending(outPath, range) // out-of-order fails loudly
+        // nothing judged, or a bit-exact redelivery of a committed batch:
+        // neither the verdict log nor the state may double-fold
+        if (range.isEmpty || KgramStreamCore.isRedelivery(state, range)) return
         val prior = state.readBuckets(touched)
         // within-batch earlier ids + all prior state, one union — the
         // probe side is trigger-sized, the state side bucket-pruned
@@ -82,7 +75,7 @@ object StreamMediaGate {
             Seq("doc_id"), "left")
           .select(col("doc_id"), col("phash"),
             coalesce(col("rej"), lit(false)).as("rejected"))
-        verdicts.coalesce(1).write.mode("append").parquet(s"$outPath/verdicts")
+        Drain.writeBatch(verdicts.coalesce(1), s"$outPath/verdicts", batchId)
         // every judged image enters the state (fate-independent blocking);
         // redelivered rows would collide — anti-join keeps append disjoint
         val fresh = prior match {
@@ -90,15 +83,15 @@ object StreamMediaGate {
             Seq("id", "doc_id"), "left_anti")
           case None => br
         }
-        state.commitAppend(fresh, f"r$batchId%010d", touched)
-        KgramStreamCore.advanceHwm(outPath, range)
+        state.commitAppendWithMeta(fresh, f"r$batchId%010d", touched,
+          KgramStreamCore.hwm(range))
       } finally { br.unpersist(blocking = false); () }
     } finally { fps.unpersist(blocking = false); () }
   }
 
   /** The admission log so far: (doc_id, rejected). */
   def summary(spark: SparkSession, outPath: String): DataFrame =
-    spark.read.parquet(s"$outPath/verdicts")
+    Drain.readLog(spark.read, s"$outPath/verdicts")
 
   /** Convenience drain over a (doc_id, mime, payload) media log. */
   def drain(spark: SparkSession, state: DocStateStore, inPath: String,

@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   *
   * Stateless by design — a document's score depends only on its own
   * tokens and the frozen model, so there is no cross-batch state, no
-  * ordering contract, no high-water mark: at-least-once redelivery
-  * re-emits the same verdict (idempotent under the downstream
-  * exactly-once sink). Retraining per batch would make admission drift
+  * ordering contract, no high-water mark: a redelivered batch
+  * overwrites its own batch with the same verdicts. Retraining per
+  * batch would make admission drift
   * with arrival order — the reason [[graft.ops.CorpusStats.nbTrain]] is
   * split from scoring.
   *
@@ -29,21 +29,21 @@ import org.apache.spark.sql.functions._
 object StreamNbGate {
 
   /** Score one micro-batch against the frozen (model, consts) pair and
-    * append the ADMITTED documents (score_q > 0) to `outPath`. */
+    * log the ADMITTED documents (score_q > 0) under `outPath`. */
   def applyBatch(model: DataFrame, consts: DataFrame, batch: DataFrame,
-                 idCol: String, textCol: String, outPath: String): Unit =
-    graft.ops.CorpusStats
+                 idCol: String, textCol: String, outPath: String, batchId: Long): Unit =
+    Drain.writeBatch(graft.ops.CorpusStats
       .nbScore(batch, idCol, textCol, model, consts, broadcastProbe = true)
       .filter(col("pred"))
-      .select(col("doc_id"), col("n_tokens"), col("score_q"))
-      .write.mode("append").parquet(outPath)
+      .select(col("doc_id"), col("n_tokens"), col("score_q")), outPath, batchId)
 
   /** Convenience drain: stream an ordered document log through
     * [[applyBatch]], return the accumulated admitted documents. */
   def drain(spark: SparkSession, model: DataFrame, consts: DataFrame,
-            inPath: String, outPath: String, ckptPath: String): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_tokens long, score_q long") {
-      (b, _) => applyBatch(model, consts, b, "doc_id", "text", outPath)
+            inPath: String, outPath: String, ckptPath: String): DataFrame = {
+    Drain.run(spark, KgramStreamCore.DocLog, inPath, ckptPath) {
+      (b, id) => applyBatch(model, consts, b, "doc_id", "text", outPath, id)
     }
+    Drain.readLog(spark.read.schema("doc_id long, n_tokens long, score_q long"), outPath)
+  }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import java.nio.file.{Files, Paths}
+import graft.expr.TextHash
 
 /** Shared per-micro-batch k-gram state machinery for the streaming
   * keep-first operators ([[StreamNovelty]], [[StreamSpanDedup]]): ONE
@@ -12,7 +12,7 @@ import java.nio.file.{Files, Paths}
   * [[summarize]]), one map-only probe of the bucket-pruned cross-batch
   * seen set against the broadcast trigger keys ([[probeSeen]]), and the
   * O(fresh) append of the batch's first occurrences into the
-  * [[DocStateStore]] ([[DocStateStore.commitAppend]] — the seen-set is
+  * [[DocStateStore]] ([[DocStateStore.commitAppendWithMeta]] — the seen-set is
   * append-only by construction, keep-first never updates an entry).
   * The summary is trigger-sized and flows through the driver under the
   * SAME memory contract the earlier relational formulation used when it
@@ -24,43 +24,35 @@ import java.nio.file.{Files, Paths}
   * With batches arriving in ascending doc_id order the incremental rule
   * equals the batch operators' global keep-first exactly — each
   * streaming op's oracle is its batch twin's SQL. That precondition is
-  * ENFORCED, not assumed: [[checkAscending]] validates every batch
-  * against a persisted doc_id high-water mark and fails the batch
-  * loudly on out-of-order arrival (an exact redelivery of the most
-  * recent batch is tolerated — at-least-once replays are expected). */
+  * ENFORCED, not assumed ([[isRedelivery]]): out-of-order arrival fails
+  * loudly against the high-water mark the store commits atomically with
+  * the seen-set delta, and a redelivered committed batch is skipped
+  * before anything is written; a replay whose commit never landed
+  * overwrites its own output partition ([[Drain.writeBatch]]). */
 private[streaming] object KgramStreamCore {
 
-  /** Validate the ascending-arrival contract: the batch's min doc_id
-    * must exceed the stored high-water mark (the previous batch's max).
-    * Returns Some((lo, hi)) to pass to [[advanceHwm]] after the commit,
-    * None for an empty batch. Throws on any out-of-order batch EXCEPT a
-    * bit-exact replay of the most recent one (same lo/hi), which a
-    * crashed-and-restarted at-least-once stream legitimately redelivers
-    * (its fresh set then folds to ∅ against the already-committed
-    * state).
-    *
-    * The range comes from the per-batch stats aggregate (one job shared
-    * with the touched-bucket computation, no extra source scan), and it
-    * covers exactly the rows whose order matters: a sub-k doc holds no
-    * k-gram state and its per-doc output is order-independent, so the
-    * occ domain (which omits it) is the precise validation scope for
-    * novelty/span-dedup; s13 validates over every fingerprint. */
-  def checkAscending(outPath: String,
-                     range: Option[(Long, Long)]): Option[(Long, Long)] = {
-    range.foreach { case (lo, hi) =>
-      val hwmFile = Paths.get(outPath, "_hwm") // '_' prefix: invisible to parquet readers
-      if (Files.exists(hwmFile)) {
-        val Array(prevLo, prevHi) = Files.readString(hwmFile).trim.split("\t").map(_.toLong)
-        if (lo <= prevHi && !(lo == prevLo && hi == prevHi))
-          throw new IllegalStateException(
-            s"out-of-order arrival: batch doc_id range [$lo, $hi] overlaps the " +
-              s"high-water mark $prevHi — the streaming keep-first gates equal " +
-              "their batch twins only under ascending doc_id arrival (an ordered " +
-              "ingestion log); re-order the input or use the batch operator")
-      }
+  /** The document log every k-gram gate drains: (doc_id, text). */
+  val DocLog: StructType = new StructType().add("doc_id", "long").add("text", "string")
+
+  /** The keep-first gates' one store-meta namespace for their mark. */
+  val Ns = "keepfirst"
+
+  /** [[GenMeta.isRedelivery]] of the batch `range` (false when empty).
+    * The range covers exactly the rows whose order matters: a sub-k doc
+    * holds no k-gram state and its per-doc output is order-independent,
+    * so the occ domain (which omits it) is the precise validation scope
+    * for novelty/span-dedup; s13 validates over every fingerprint. */
+  def isRedelivery(state: DocStateStore, range: Option[(Long, Long)]): Boolean =
+    range.exists { case (lo, hi) =>
+      GenMeta.isRedelivery(state, Ns, lo, hi,
+        "the streaming keep-first gates equal their batch twins only under " +
+          "ascending doc_id arrival (an ordered ingestion log); re-order the " +
+          "input or use the batch operator")
     }
-    range
-  }
+
+  /** The mark a gate's state commit carries (none for an empty batch). */
+  def hwm(range: Option[(Long, Long)]): Map[String, String] =
+    range.fold(Map.empty[String, String]) { case (lo, hi) => GenMeta.hwm(Ns, lo, hi) }
 
   /** One action returning (doc_id range, touched buckets) over a cached
     * per-batch frame: min/max for the ascending-arrival check and the
@@ -77,14 +69,6 @@ private[streaming] object KgramStreamCore {
     else (Some((r.getLong(0), r.getLong(1))),
       r.getSeq[Int](2).sorted)
   }
-
-  /** Persist the validated batch's doc_id range as the new high-water
-    * mark — called AFTER the state commit so a crash between the two
-    * replays the batch (tolerated above) rather than skipping it. */
-  def advanceHwm(outPath: String, range: Option[(Long, Long)]): Unit =
-    range.foreach { case (lo, hi) =>
-      IndexState.atomicWriteString(Paths.get(outPath, "_hwm"), s"$lo\t$hi")
-    }
 
   /** Driver-merged per-trigger k-gram summary: the batch's distinct
     * k-gram hashes (SORTED — the probe side binary-searches them), the
@@ -284,12 +268,13 @@ private[streaming] object KgramStreamCore {
     }
 
   /** Append the batch's first-occurrence k-grams (summary hashes not in
-    * `seenSorted`) into the store as a delta: write volume is O(fresh),
-    * never O(seen) — the seen-set is append-only, so
-    * [[DocStateStore.commitAppend]] applies ([[TxnLogState]] bounds the
-    * delta chains by merging heavy buckets on its `maintain()` cadence).
-    * No distinct needed: seen is unique by induction (disjoint fresh
-    * sets appended) and the summary's hashes are distinct. */
+    * `seenSorted`) into the store as a delta with the batch's [[hwm]]:
+    * write volume is O(fresh), never O(seen) — the seen-set is
+    * append-only, so [[DocStateStore.commitAppendWithMeta]] applies
+    * ([[TxnLogState]] bounds the delta chains by merging heavy buckets on
+    * its `maintain()` cadence). No distinct needed: seen is unique by
+    * induction (disjoint fresh sets appended) and the summary's hashes
+    * are distinct. */
   def commitFresh(state: DocStateStore, sum: KgramSummary,
                   seenSorted: Array[Long], batchId: Long,
                   spark: SparkSession): Unit = {
@@ -314,7 +299,7 @@ private[streaming] object KgramStreamCore {
           }
         }
         .toDF("id")
-      state.commitAppend(freshDf, f"n$batchId%09d", sum.touched)
+      state.commitAppendWithMeta(freshDf, f"n$batchId%09d", sum.touched, hwm(sum.range))
       // destroy once the commit action has consumed it: millions of
       // packed longs per char-granular trigger must not wait on the
       // GC-driven ContextCleaner across a long drain
@@ -322,14 +307,45 @@ private[streaming] object KgramStreamCore {
     state.maintain()
   }
 
-  /** Drain an ordered document log (doc_id long, text string) through
-    * `perBatch` ([[Drain.run]]), then read back the accumulated output. */
-  def drain(spark: SparkSession, inPath: String, outPath: String,
-            ckptPath: String, outSchema: String)
-           (perBatch: (DataFrame, Long) => Unit): DataFrame = {
-    Drain.run(spark, new StructType().add("doc_id", "long").add("text", "string"),
-      inPath, ckptPath)(perBatch)
-    spark.read.schema(outSchema).parquet(outPath)
+  /** The span-cut pass of both span gates: a window is cut iff its
+    * k-gram is `seen` or a non-winner occurrence within the batch, decided
+    * in one map-only pass over the cached hashes against the broadcast
+    * summary, rebuilt inline by `remove` and sized (n, n_removed) by
+    * `count`; writes (doc_id, `nCol`, n_removed, clean_text) as batch
+    * `batchId`, then destroys the broadcasts eagerly (ContextCleaner is
+    * too lazy for a long drain). */
+  def cutSpans(hashed: Dataset[(Long, String, Array[Long])], sum: KgramSummary,
+               seen: Array[Long], nCol: String, outPath: String, batchId: Long)
+              (count: (String, String) => (Long, Long),
+               remove: (String, Array[Long]) => String): Unit = {
+    val spark = hashed.sparkSession
+    import spark.implicits._
+    val bcs = Seq(sum.hs, sum.winDoc, sum.winPos, seen).map(spark.sparkContext.broadcast(_))
+    try Drain.writeBatch(hashed
+      .mapPartitions { it =>
+        val Seq(hsK, wd, wp, sn) = bcs.map(_.value)
+        it.map { case (docId, text, hs) =>
+          if (text == null)
+            (docId, None: Option[Long], None: Option[Long], null: String)
+          else {
+            val starts = scala.collection.mutable.ArrayBuffer.empty[Long]
+            var i = 0
+            while (i < hs.length) {
+              val h = hs(i)
+              val pos = (i + 1).toLong
+              val gi = java.util.Arrays.binarySearch(hsK, h) // always ≥ 0
+              if (java.util.Arrays.binarySearch(sn, h) >= 0 ||
+                  !(wd(gi) == docId && wp(gi) == pos)) starts += pos
+              i += 1
+            }
+            val clean = remove(text, starts.toArray)
+            val (n, removed) = count(text, clean)
+            (docId, Some(n), Some(removed), clean)
+          }
+        }
+      }
+      .toDF("doc_id", nCol, "n_removed", "clean_text"), outPath, batchId)
+    finally bcs.foreach(_.destroy())
   }
 }
 
@@ -359,16 +375,17 @@ private[streaming] object KgramStreamCore {
   */
 object StreamNovelty {
 
-  /** Process one micro-batch: append (doc_id, n_windows, n_novel,
-    * novelty) rows to `outPath` and fold the batch's first-occurrence
-    * k-grams into `state`. Returns the touched bucket ids. */
+  /** Process one micro-batch: write (doc_id, n_windows, n_novel,
+    * novelty) rows as batch `batchId` of `outPath` and fold the batch's
+    * first-occurrence k-grams into `state`. Returns the touched bucket
+    * ids (none for a skipped redelivery). */
   def applyBatch(state: DocStateStore, batch: DataFrame, idCol: String,
                  textCol: String, k: Int, outPath: String,
                  batchId: Long): Seq[Int] = {
     val spark = batch.sparkSession
     import spark.implicits._
     val sum = KgramStreamCore.summarize(batch, idCol, textCol, k, state.buckets)
-    KgramStreamCore.checkAscending(outPath, sum.range)
+    if (KgramStreamCore.isRedelivery(state, sum.range)) return Seq.empty
     val seen = KgramStreamCore.probeSeen(state, sum, spark)
     // novel per doc = its fresh winner count, folded driver-side from
     // the summary (the retired relational tag-union aggregation moved
@@ -388,11 +405,9 @@ object StreamNovelty {
       val n = novel.getOrDefault(java.lang.Long.valueOf(d), 0L)
       (d, w, n, n.toDouble / w)
     }
-    spark.createDataset(rows)
-      .toDF("doc_id", "n_windows", "n_novel", "novelty")
-      .coalesce(1).write.mode("append").parquet(outPath)
+    Drain.writeBatch(spark.createDataset(rows)
+      .toDF("doc_id", "n_windows", "n_novel", "novelty").coalesce(1), outPath, batchId)
     KgramStreamCore.commitFresh(state, sum, seen, batchId, spark)
-    KgramStreamCore.advanceHwm(outPath, sum.range)
     sum.touched
   }
 
@@ -400,11 +415,13 @@ object StreamNovelty {
     * (doc_id long, text string) file-by-file, gate every batch through
     * [[applyBatch]], return the accumulated per-doc novelty scores. */
   def drain(spark: SparkSession, state: DocStateStore, inPath: String,
-            outPath: String, ckptPath: String, k: Int = 8): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_windows long, n_novel long, novelty double") {
+            outPath: String, ckptPath: String, k: Int = 8): DataFrame = {
+    Drain.run(spark, KgramStreamCore.DocLog, inPath, ckptPath) {
       (b, id) => applyBatch(state, b, "doc_id", "text", k, outPath, id); ()
     }
+    Drain.readLog(spark.read.schema(
+      "doc_id long, n_windows long, n_novel long, novelty double"), outPath)
+  }
 }
 
 /** Streaming DOC-LEVEL exact dedup — [[graft.ops.Dedup.exactGroups]]'
@@ -421,9 +438,10 @@ object StreamNovelty {
   * watermarked event-id horizon. Output: (doc_id, kept). */
 object StreamExactDedup {
 
-  /** Process one micro-batch: append (doc_id, kept) rows to `outPath`
-    * and fold the batch's first-seen fingerprints into `state`. Returns
-    * the touched bucket ids. */
+  /** Process one micro-batch: write (doc_id, kept) rows as batch
+    * `batchId` of `outPath` and fold the batch's first-seen fingerprints
+    * into `state`. Returns the touched bucket ids (none for a skipped
+    * redelivery). */
   def applyBatch(state: DocStateStore, batch: DataFrame, idCol: String,
                  textCol: String, outPath: String, batchId: Long): Seq[Int] = {
     val spark = batch.sparkSession
@@ -437,7 +455,7 @@ object StreamExactDedup {
       // one stats action: fills the fps cache, yields range + touched
       val (range, touched) = KgramStreamCore.batchStats(
         fps, "doc_id", col("fp"), state.buckets)
-      KgramStreamCore.checkAscending(outPath, range)
+      if (KgramStreamCore.isRedelivery(state, range)) return Seq.empty
       val winners = fps.groupBy(col("fp"))
         .agg(min(col("doc_id")).as("w_id")).persist()
       try {
@@ -452,19 +470,17 @@ object StreamExactDedup {
         val seenHit = seen.select(col("id").as("fp"))
           .join(broadcast(winners.select(col("fp"))), Seq("fp"))
           .persist()
-        fps.join(winners, Seq("fp"))
+        Drain.writeBatch(fps.join(winners, Seq("fp"))
           .join(broadcast(seenHit.withColumn("_seen", lit(true))), Seq("fp"), "left")
           .select(col("doc_id"),
             (col("doc_id") === col("w_id") &&
-              !coalesce(col("_seen"), lit(false))).as("kept"))
-          .write.mode("append").parquet(outPath)
+              !coalesce(col("_seen"), lit(false))).as("kept")), outPath, batchId)
         val fresh = winners
           .join(broadcast(seenHit), Seq("fp"), "left_anti")
-        state.commitAppend(fresh.select(col("fp").as("id")),
-          f"n$batchId%09d", touched)
+        state.commitAppendWithMeta(fresh.select(col("fp").as("id")),
+          f"n$batchId%09d", touched, KgramStreamCore.hwm(range))
         seenHit.unpersist()
         state.maintain()
-        KgramStreamCore.advanceHwm(outPath, range)
         touched
       } finally { winners.unpersist(); () }
     } finally { fps.unpersist(); () }
@@ -473,11 +489,12 @@ object StreamExactDedup {
   /** Convenience drain: stream an ordered document log through
     * [[applyBatch]], return the accumulated keep decisions. */
   def drain(spark: SparkSession, state: DocStateStore, inPath: String,
-            outPath: String, ckptPath: String): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, kept boolean") {
+            outPath: String, ckptPath: String): DataFrame = {
+    Drain.run(spark, KgramStreamCore.DocLog, inPath, ckptPath) {
       (b, id) => applyBatch(state, b, "doc_id", "text", outPath, id); ()
     }
+    Drain.readLog(spark.read.schema("doc_id long, kept boolean"), outPath)
+  }
 }
 
 /** Streaming EXACT-SUBSTRING span dedup — [[graft.ops.Dedup.dedupSpans]]
@@ -492,67 +509,27 @@ object StreamExactDedup {
   * with the same `removeTokenSpans` kernel the expression wraps. */
 object StreamSpanDedup {
 
-  /** Process one micro-batch: append (doc_id, n_tokens, n_removed,
-    * clean_text) rows to `outPath` and fold the batch's first-occurrence
-    * k-grams into `state`. Returns the touched bucket ids. */
+  /** Process one micro-batch: write (doc_id, n_tokens, n_removed,
+    * clean_text) rows as batch `batchId` of `outPath` and fold the
+    * batch's first-occurrence k-grams into `state`. Returns the touched
+    * bucket ids (none for a skipped redelivery). */
   def applyBatch(state: DocStateStore, batch: DataFrame, idCol: String,
                  textCol: String, k: Int, outPath: String,
                  batchId: Long): Seq[Int] = {
     val spark = batch.sparkSession
-    import spark.implicits._
     // the k-gram kernel runs ONCE per trigger: the persisted hashed frame
     // feeds the summary collect (which fills the cache) AND the rebuild
-    // pass below — the r17 shape re-hashed the whole batch in the rebuild,
+    // pass — the r17 shape re-hashed the whole batch in the rebuild,
     // ~a third of this drain's per-trigger wall for pure recomputation
     val hashed = KgramStreamCore.hashedDocs(batch, idCol, textCol, k).persist()
     try {
       val sum = KgramStreamCore.summarizeHashed(hashed, state.buckets)
-      KgramStreamCore.checkAscending(outPath, sum.range)
+      if (KgramStreamCore.isRedelivery(state, sum.range)) return Seq.empty
       val seen = KgramStreamCore.probeSeen(state, sum, spark)
-      // duplicate starts: every occurrence of a previously-seen k-gram,
-      // plus every non-winner occurrence within the batch — decided per
-      // occurrence in one map-only pass over the cached hashes against
-      // the broadcast summary (the retired relational path re-joined the
-      // occ explode to winners and the seen marks, then collected starts
-      // per doc through another shuffle). The rebuild runs inline with
-      // the same removeTokenSpans kernel the expression wraps.
-      val bcHs = spark.sparkContext.broadcast(sum.hs)
-      val bcDoc = spark.sparkContext.broadcast(sum.winDoc)
-      val bcPos = spark.sparkContext.broadcast(sum.winPos)
-      val bcSeen = spark.sparkContext.broadcast(seen)
-      try hashed
-        .mapPartitions { it =>
-          val hsK = bcHs.value; val wd = bcDoc.value; val wp = bcPos.value
-          val sn = bcSeen.value
-          it.map { case (docId, text, hs) =>
-            if (text == null)
-              (docId, None: Option[Long], None: Option[Long], null: String)
-            else {
-              val starts = scala.collection.mutable.ArrayBuffer.empty[Long]
-              var i = 0
-              while (i < hs.length) {
-                val h = hs(i)
-                val pos = (i + 1).toLong
-                val gi = java.util.Arrays.binarySearch(hsK, h) // always ≥ 0
-                if (java.util.Arrays.binarySearch(sn, h) >= 0 ||
-                    !(wd(gi) == docId && wp(gi) == pos)) starts += pos
-                i += 1
-              }
-              val nTok = graft.expr.TextHash.tokenCount(text)
-              val clean = graft.expr.TextHash.removeTokenSpans(text, starts.toArray, k)
-              (docId, Some(nTok), Some(nTok - graft.expr.TextHash.tokenCount(clean)),
-                clean)
-            }
-          }
-        }
-        .toDF("doc_id", "n_tokens", "n_removed", "clean_text")
-        .write.mode("append").parquet(outPath)
-      // the write above is the only consumer: destroy the trigger's
-      // summary broadcasts eagerly instead of leaving millions of longs
-      // to the GC-driven ContextCleaner across a long drain
-      finally Seq(bcHs, bcDoc, bcPos, bcSeen).foreach(_.destroy())
+      KgramStreamCore.cutSpans(hashed, sum, seen, "n_tokens", outPath, batchId)(
+        (t, c) => { val n = TextHash.tokenCount(t); (n, n - TextHash.tokenCount(c)) },
+        TextHash.removeTokenSpans(_, _, k))
       KgramStreamCore.commitFresh(state, sum, seen, batchId, spark)
-      KgramStreamCore.advanceHwm(outPath, sum.range)
       sum.touched
     } finally { hashed.unpersist(blocking = false); () }
   }
@@ -560,11 +537,13 @@ object StreamSpanDedup {
   /** Convenience drain: stream an ordered document log through
     * [[applyBatch]], return the accumulated cleaned documents. */
   def drain(spark: SparkSession, state: DocStateStore, inPath: String,
-            outPath: String, ckptPath: String, k: Int = 8): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_tokens long, n_removed long, clean_text string") {
+            outPath: String, ckptPath: String, k: Int = 8): DataFrame = {
+    Drain.run(spark, KgramStreamCore.DocLog, inPath, ckptPath) {
       (b, id) => applyBatch(state, b, "doc_id", "text", k, outPath, id); ()
     }
+    Drain.readLog(spark.read.schema(
+      "doc_id long, n_tokens long, n_removed long, clean_text string"), outPath)
+  }
 }
 
 /** Streaming CHAR-granular exact-substring span dedup —
@@ -577,9 +556,10 @@ object StreamSpanDedup {
   * global keep-first cover mask exactly, so its oracle is d30's SQL. */
 object StreamCharSpanDedup {
 
-  /** Process one micro-batch: append (doc_id, n_chars, n_removed,
-    * clean_text) rows to `outPath` and fold the batch's first-occurrence
-    * char k-grams into `state`. Returns the touched bucket ids. */
+  /** Process one micro-batch: write (doc_id, n_chars, n_removed,
+    * clean_text) rows as batch `batchId` of `outPath` and fold the
+    * batch's first-occurrence char k-grams into `state`. Returns the
+    * touched bucket ids (none for a skipped redelivery). */
   def applyBatch(state: DocStateStore, batch: DataFrame, idCol: String,
                  textCol: String, k: Int, outPath: String,
                  batchId: Long): Seq[Int] = {
@@ -594,50 +574,21 @@ object StreamCharSpanDedup {
         batch.select(col(idCol).cast("long"), col(textCol)))
       .as[(Long, String)]
       .map { case (d, t) =>
-        (d, t, if (t == null) null else graft.expr.TextHash.charKgramHashes60(t, k))
+        (d, t, if (t == null) null else TextHash.charKgramHashes60(t, k))
       }.persist()
     try {
       val sum = KgramStreamCore.summarizeHashed(hashed, state.buckets)
-      KgramStreamCore.checkAscending(outPath, sum.range)
+      if (KgramStreamCore.isRedelivery(state, sum.range)) return Seq.empty
       val seen = KgramStreamCore.probeSeen(state, sum, spark)
-      val bcHs = spark.sparkContext.broadcast(sum.hs)
-      val bcDoc = spark.sparkContext.broadcast(sum.winDoc)
-      val bcPos = spark.sparkContext.broadcast(sum.winPos)
-      val bcSeen = spark.sparkContext.broadcast(seen)
-      try hashed
-        .mapPartitions { it =>
-          val hsK = bcHs.value; val wd = bcDoc.value; val wp = bcPos.value
-          val sn = bcSeen.value
-          it.map { case (docId, text, hs) =>
-            if (text == null)
-              (docId, None: Option[Long], None: Option[Long], null: String)
-            else {
-              val starts = scala.collection.mutable.ArrayBuffer.empty[Long]
-              var i = 0
-              while (i < hs.length) {
-                val h = hs(i)
-                val pos = (i + 1).toLong
-                val gi = java.util.Arrays.binarySearch(hsK, h) // always ≥ 0
-                if (java.util.Arrays.binarySearch(sn, h) >= 0 ||
-                    !(wd(gi) == docId && wp(gi) == pos)) starts += pos
-                i += 1
-              }
-              // code points, not UTF-16 units — the same frame as the
-              // kernels, Spark length(), and the DuckDB oracle
-              val nChars = graft.expr.TextHash.normalizedCodePointCount(text)
-              val clean = graft.expr.TextHash.removeCharSpans(text, starts.toArray, k)
-              (docId, Some(nChars),
-                Some(nChars - clean.codePointCount(0, clean.length)), clean)
-            }
-          }
-        }
-        .toDF("doc_id", "n_chars", "n_removed", "clean_text")
-        .write.mode("append").parquet(outPath)
-      // char-granular triggers carry the largest summaries of the
-      // family — destroy eagerly once the write has consumed them
-      finally Seq(bcHs, bcDoc, bcPos, bcSeen).foreach(_.destroy())
+      // code points, not UTF-16 units — the same frame as the kernels,
+      // Spark length(), and the DuckDB oracle
+      KgramStreamCore.cutSpans(hashed, sum, seen, "n_chars", outPath, batchId)(
+        (t, c) => {
+          val n = TextHash.normalizedCodePointCount(t)
+          (n, n - c.codePointCount(0, c.length))
+        },
+        TextHash.removeCharSpans(_, _, k))
       KgramStreamCore.commitFresh(state, sum, seen, batchId, spark)
-      KgramStreamCore.advanceHwm(outPath, sum.range)
       sum.touched
     } finally { hashed.unpersist(blocking = false); () }
   }
@@ -645,11 +596,13 @@ object StreamCharSpanDedup {
   /** Convenience drain: stream an ordered document log through
     * [[applyBatch]], return the accumulated cleaned documents. */
   def drain(spark: SparkSession, state: DocStateStore, inPath: String,
-            outPath: String, ckptPath: String, k: Int = 25): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_chars long, n_removed long, clean_text string") {
+            outPath: String, ckptPath: String, k: Int = 25): DataFrame = {
+    Drain.run(spark, KgramStreamCore.DocLog, inPath, ckptPath) {
       (b, id) => applyBatch(state, b, "doc_id", "text", k, outPath, id); ()
     }
+    Drain.readLog(spark.read.schema(
+      "doc_id long, n_chars long, n_removed long, clean_text string"), outPath)
+  }
 }
 
 /** Streaming CHAR-granular benchmark DECONTAMINATION —
@@ -665,13 +618,13 @@ object StreamCharSpanDedup {
   * shuffles, zero state reads. */
 object StreamCharDecontamination {
 
-  /** Process one micro-batch: append (doc_id, n_windows, n_hits,
-    * contaminated) rows to `outPath`. */
+  /** Process one micro-batch: write (doc_id, n_windows, n_hits,
+    * contaminated) rows as batch `batchId` of `outPath`. */
   def applyBatch(benchGrams: org.apache.spark.broadcast.Broadcast[Array[Long]],
                  batch: DataFrame, idCol: String, textCol: String, k: Int,
-                 outPath: String): Unit =
-    graft.ops.Dedup.charContaminationPrepared(batch, benchGrams, idCol, textCol, k)
-      .write.mode("append").parquet(outPath)
+                 outPath: String, batchId: Long): Unit =
+    Drain.writeBatch(graft.ops.Dedup.charContaminationPrepared(
+      batch, benchGrams, idCol, textCol, k), outPath, batchId)
 
   /** Convenience drain: freeze the benchmark side once, gate the whole
     * document log through [[applyBatch]], return the accumulated
@@ -681,11 +634,12 @@ object StreamCharDecontamination {
             outPath: String, ckptPath: String, k: Int = 25,
             maxBenchGrams: Int = graft.ops.Dedup.DefaultMaxBenchGrams): DataFrame = {
     val bg = graft.ops.Dedup.charBenchGrams(benchmark, "text", k, maxBenchGrams)
-    try KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_windows long, n_hits long, contaminated boolean") {
-      (b, _) => applyBatch(bg, b, "doc_id", "text", k, outPath)
+    try Drain.run(spark, KgramStreamCore.DocLog, inPath, ckptPath) {
+      (b, id) => applyBatch(bg, b, "doc_id", "text", k, outPath, id)
     }
     finally bg.destroy()
+    Drain.readLog(spark.read.schema(
+      "doc_id long, n_windows long, n_hits long, contaminated boolean"), outPath)
   }
 }
 
@@ -693,24 +647,25 @@ object StreamCharDecontamination {
   * contamination census ([[graft.ops.Dedup.charContaminationCensus]]):
   * the benchmark side freezes into the provenance-keeping CSR broadcast
   * ([[graft.ops.Dedup.charBenchGramIndex]], bounded by name) at drain
-  * start; every trigger runs the same map-only probe and APPENDS its
+  * start; every trigger runs the same map-only probe and logs its
   * leak-sized (doc, item, shared_windows) pairs — the pair log IS the
   * incremental state, and the census the eval owner reads is a
   * benchmark-sized view over it. Pairs are per-doc facts against a
   * static reference set (no cross-batch state), so ANY arrival order
-  * equals the batch census and d32's SQL is the oracle verbatim. The
-  * view re-aggregates per (item, doc) with max() before the census, so
-  * an at-least-once replay of a trigger (identical rows appended twice)
-  * cannot double-count a doc. */
+  * equals the batch census and d32's SQL is the oracle verbatim. A
+  * replayed trigger overwrites its own batch partition of the log; the
+  * view also re-aggregates per (item, doc) with max() before the
+  * census, so even a doc logged by two triggers counts once. */
 object StreamContaminationCensus {
 
-  /** Process one micro-batch: append this trigger's contamination pairs
-    * to `outPath`. Leak-sized — clean docs emit nothing. */
+  /** Process one micro-batch: write this trigger's contamination pairs
+    * as batch `batchId` of `outPath`. Leak-sized — clean docs emit
+    * nothing. */
   def applyBatch(index: org.apache.spark.broadcast.Broadcast[graft.ops.Dedup.CharBenchGramIndex],
                  batch: DataFrame, idCol: String, textCol: String, k: Int,
-                 outPath: String): Unit =
-    graft.ops.Dedup.charContaminationPairs(batch, index, idCol, textCol, k)
-      .write.mode("append").parquet(outPath)
+                 outPath: String, batchId: Long): Unit =
+    Drain.writeBatch(graft.ops.Dedup.charContaminationPairs(
+      batch, index, idCol, textCol, k), outPath, batchId)
 
   /** Convenience drain: freeze the benchmark index once, run the whole
     * document log through [[applyBatch]], return the census view over
@@ -720,12 +675,12 @@ object StreamContaminationCensus {
             outPath: String, ckptPath: String, k: Int = 25,
             maxPairs: Int = graft.ops.Dedup.DefaultMaxBenchGrams): DataFrame = {
     val idx = graft.ops.Dedup.charBenchGramIndex(benchmark, "bench_id", "text", k, maxPairs)
-    val pairs =
-      try KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-        "doc_id long, bench_id long, shared_windows long") {
-        (b, _) => applyBatch(idx, b, "doc_id", "text", k, outPath)
-      }
-      finally idx.destroy()
+    try Drain.run(spark, KgramStreamCore.DocLog, inPath, ckptPath) {
+      (b, id) => applyBatch(idx, b, "doc_id", "text", k, outPath, id)
+    }
+    finally idx.destroy()
+    val pairs = Drain.readLog(spark.read.schema(
+      "doc_id long, bench_id long, shared_windows long"), outPath)
     graft.ops.Dedup.charCensusOf(
       pairs.groupBy(col("bench_id"), col("doc_id"))
         .agg(max(col("shared_windows")).as("shared_windows")),
@@ -743,13 +698,13 @@ object StreamContaminationCensus {
   * kernel pass, zero shuffles, zero state reads. */
 object StreamCharSpanDecontamination {
 
-  /** Process one micro-batch: append (doc_id, n_chars, n_removed,
-    * clean_text) rows to `outPath`. */
+  /** Process one micro-batch: write (doc_id, n_chars, n_removed,
+    * clean_text) rows as batch `batchId` of `outPath`. */
   def applyBatch(benchGrams: org.apache.spark.broadcast.Broadcast[Array[Long]],
                  batch: DataFrame, idCol: String, textCol: String, k: Int,
-                 outPath: String): Unit =
-    graft.ops.Dedup.charDecontaminateSpansPrepared(batch, benchGrams, idCol, textCol, k)
-      .write.mode("append").parquet(outPath)
+                 outPath: String, batchId: Long): Unit =
+    Drain.writeBatch(graft.ops.Dedup.charDecontaminateSpansPrepared(
+      batch, benchGrams, idCol, textCol, k), outPath, batchId)
 
   /** Convenience drain: freeze the benchmark side once, rebuild the
     * whole document log through [[applyBatch]], return the accumulated
@@ -759,10 +714,11 @@ object StreamCharSpanDecontamination {
             outPath: String, ckptPath: String, k: Int = 25,
             maxBenchGrams: Int = graft.ops.Dedup.DefaultMaxBenchGrams): DataFrame = {
     val bg = graft.ops.Dedup.charBenchGrams(benchmark, "text", k, maxBenchGrams)
-    try KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
-      "doc_id long, n_chars long, n_removed long, clean_text string") {
-      (b, _) => applyBatch(bg, b, "doc_id", "text", k, outPath)
+    try Drain.run(spark, KgramStreamCore.DocLog, inPath, ckptPath) {
+      (b, id) => applyBatch(bg, b, "doc_id", "text", k, outPath, id)
     }
     finally bg.destroy()
+    Drain.readLog(spark.read.schema(
+      "doc_id long, n_chars long, n_removed long, clean_text string"), outPath)
   }
 }

@@ -22,12 +22,12 @@ import org.apache.spark.sql.types.StructType
   *
   * Per trigger: one class-keyed window over the BATCH (trigger-sized,
   * never the stream), a broadcast join against the counter generation,
-  * and an append of the admitted rows — per-trigger cost ∝ trigger
+  * and a write of the admitted rows — per-trigger cost ∝ trigger
   * size, state I/O ∝ |classes|. */
 object StreamQuota {
 
-  /** Fold one (doc_id, cls) micro-batch: append admitted rows
-    * (doc_id, cls, adm_rk) to `outPath`, advance the counters. */
+  /** Fold one (doc_id, cls) micro-batch: log admitted rows
+    * (doc_id, cls, adm_rk) under `outPath`, advance the counters. */
   def applyBatch(stateDir: String, quotas: Map[String, Long],
                  batch: DataFrame, outPath: String, batchId: Long): Unit = {
     val b = batch.select(col("doc_id"), col("cls")).cache()
@@ -50,12 +50,10 @@ object StreamQuota {
         .select(col("doc_id"), col("cls"), (col("_n0") + col("_rk")).as("adm_rk"))
         .cache()
       try {
-        // batch-tagged IDEMPOTENT output: each batch owns the partition
-        // directory keyed by its lo doc_id, written with overwrite — a
-        // replayed batch (crash after this write, before the manifest
+        // a replayed batch (crash after this write, before the manifest
         // commit) recomputes against the UNCHANGED counters and rewrites
-        // the identical rows instead of appending duplicates
-        admitted.write.mode("overwrite").parquet(s"$outPath/adm_lo=${f.lo}")
+        // its own batch partition instead of appending duplicates
+        Drain.writeBatch(admitted, outPath, batchId)
 
         val batchCounts = admitted.groupBy(col("cls"))
           .agg(count(lit(1)).as("n_adm"))
@@ -74,8 +72,6 @@ object StreamQuota {
             inPath: String, outPath: String, ckptPath: String): DataFrame = {
     Drain.run(spark, new StructType().add("doc_id", "long").add("cls", "string"),
       inPath, ckptPath)((b, id) => applyBatch(stateDir, quotas, b, outPath, id))
-    // drop the batch-tag partition column — consumers see the same
-    // (doc_id, cls, adm_rk) shape as before the idempotent-output fix
-    spark.read.parquet(outPath).select(col("doc_id"), col("cls"), col("adm_rk"))
+    Drain.readLog(spark.read, outPath)
   }
 }

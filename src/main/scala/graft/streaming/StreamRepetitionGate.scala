@@ -11,9 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Stateless like the other per-doc gates (s07 heuristics, s14 NB,
   * s15 DSIR): a document's repetition features depend only on its own
-  * text, so no cross-batch state, no ordering contract, and
-  * at-least-once redelivery re-emits identical rows. The drained union
-  * of per-batch outputs IS the batch operator over the whole log.
+  * text, so no cross-batch state, no ordering contract, and a replayed
+  * batch overwrites its own rows. The drained union of per-batch
+  * outputs IS the batch operator over the whole log.
   *
   * Scale shape: within a trigger the per-doc windows (char-offset
   * cumsum, n-gram leads, interval union) partition by doc_id — the
@@ -21,20 +21,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * crosses documents, let alone triggers. */
 object StreamRepetitionGate {
 
-  /** Gate one (doc_id, text) micro-batch and append its feature rows. */
+  /** Gate one (doc_id, text) micro-batch and log its feature rows. */
   def applyBatch(batch: DataFrame, idCol: String, textCol: String,
-                 outPath: String): Unit =
-    graft.ops.TextAnalysis.repetitionGate(batch, idCol, textCol)
-      .write.mode("append").parquet(outPath)
+                 outPath: String, batchId: Long): Unit =
+    Drain.writeBatch(graft.ops.TextAnalysis.repetitionGate(batch, idCol, textCol),
+      outPath, batchId)
 
   /** Convenience drain: stream an ordered document log through
     * [[applyBatch]], return the accumulated feature rows. */
   def drain(spark: SparkSession, inPath: String, outPath: String,
-            ckptPath: String): DataFrame =
-    KgramStreamCore.drain(spark, inPath, outPath, ckptPath,
+            ckptPath: String): DataFrame = {
+    Drain.run(spark, KgramStreamCore.DocLog, inPath, ckptPath) {
+      (b, id) => applyBatch(b, "doc_id", "text", outPath, id)
+    }
+    Drain.readLog(spark.read.schema(
       "doc_id long, n_lines long, dup_line_ppm long, dup_line_char_ppm long, " +
         "n_paras long, dup_para_ppm long, dup_para_char_ppm long, " +
-        "top2_char_ppm long, n_chars long, dup5_char_ppm long, rep_pass long") {
-      (b, _) => applyBatch(b, "doc_id", "text", outPath)
-    }
+        "top2_char_ppm long, n_chars long, dup5_char_ppm long, rep_pass long"), outPath)
+  }
 }

@@ -26,8 +26,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Unlike retention's min/union fold, edge counts are ADDITIVE — order
   * matters and replay double-counts — so the ascending-event_id arrival
-  * contract is ENFORCED against a persisted high-water mark (the
-  * [[KgramStreamCore.checkAscending]] design): out-of-order batches fail
+  * contract is ENFORCED against a persisted high-water mark (the one
+  * arrival rule, [[GenManifest.arrival]]): out-of-order batches fail
   * loudly; a bit-exact redelivery of the most recent batch is detected
   * by its (lo, hi) range and SKIPPED (already folded — at-least-once
   * replays are expected, silent double-counts are not). */

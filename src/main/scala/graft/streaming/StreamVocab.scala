@@ -84,8 +84,7 @@ object StreamVocab {
       // (a crash between the old separate hwm write and the commit
       // double-counted the replay). An all-blank batch still commits a
       // kv-only entry so the hwm advances.
-      state.commitWithMeta(merged, f"r$batchId%010d", touched,
-        Map(s"$Ns.hwm" -> s"$lo,$hi"))
+      state.commitWithMeta(merged, f"r$batchId%010d", touched, GenMeta.hwm(Ns, lo, hi))
     } finally { (b :: cached).foreach(_.unpersist(blocking = false)); () }
   }
 

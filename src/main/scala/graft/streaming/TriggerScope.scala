@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
@@ -49,8 +49,18 @@ object TriggerScope {
   * `perBatch` under [[TriggerScope.scoped]], and the query drains what
   * is there (`AvailableNow`) and returns once it has. The checkpoint
   * makes the drain resumable: a rerun over the same `ckptPath` only
-  * sees files that arrived since. */
+  * sees files that arrived since. It also owns the output-log layout:
+  * one `batch=<batchId>` partition per batch, so a replay (same id)
+  * rewrites its own rows instead of appending a second copy. */
 object Drain {
+
+  /** Write `out` as batch `batchId` of the log at `outPath`. */
+  def writeBatch(out: DataFrame, outPath: String, batchId: Long): Unit =
+    out.write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
+
+  /** The log at `outPath` without its batch column, read by `reader`. */
+  def readLog(reader: DataFrameReader, outPath: String): DataFrame =
+    reader.parquet(outPath).drop("batch")
 
   def run(spark: SparkSession, schema: StructType, inPath: String, ckptPath: String)
          (perBatch: (DataFrame, Long) => Unit): Unit =

@@ -565,11 +565,15 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("q_id", "rk").collect().toSeq)
 
     // PQ compaction copies codes (frozen books) minus tombstones
+    val (_, _, gen1, _, _) = Similarity.resolveIvfPqIndex(dir)
     Similarity.compactIvfPqIndex(spark, dir)
     val (_, _, gen2, _, _) = Similarity.resolveIvfPqIndex(dir)
     assert(!java.nio.file.Files.isDirectory(
       java.nio.file.Paths.get(s"$dir/$gen2", "_tombstones")))
     assert(rows() == masked, "PQ compaction must not change serving results")
+    // the superseded generation is reclaimable through the IVFPQ manifest
+    assert(Similarity.vacuumIvfIndex(dir, graceMs = 0L) == Seq(gen1))
+    assert(rows() == masked, "vacuum must not change serving results")
   }
 
   test("IVF rebuild: fresh generation behind ONE manifest flip; superseded gen vacuums") {
@@ -730,6 +734,9 @@ class SimilaritySpec extends SparkSpec {
     val work = java.nio.file.Files.createTempDirectory("graft_sdrift").toString
     graft.streaming.StreamDrift.applyBatch(s"$work/reports", cents,
       corpus.filter(col("vec_id") % 2 === 0), 0L)
+    graft.streaming.StreamDrift.applyBatch(s"$work/reports", cents,
+      corpus.filter(col("vec_id") % 2 === 1), 1L)
+    // at-least-once: the last trigger redelivered under its own batch id
     graft.streaming.StreamDrift.applyBatch(s"$work/reports", cents,
       corpus.filter(col("vec_id") % 2 === 1), 1L)
     val got = graft.streaming.StreamDrift.summary(spark, s"$work/reports")

@@ -225,9 +225,8 @@ class GenManifestSpec extends SparkSpec {
     * raw file while the writer had moved to the fused format; this test
     * enumerates ALL `_current` writers so any future format change
     * breaks HERE, not in production. (StreamVocab/Transitions/
-    * Attribution/UniqueTokens ride the store meta, not a file;
-    * StreamNovelty keeps a bare `_hwm` with append-only output — both
-    * contracts pinned elsewhere.) */
+    * Attribution/UniqueTokens and the keep-first gates ride the store
+    * meta, not a file — pinned elsewhere.) */
   test("drift guard: every filesystem-manifest monitor writes fused and reads back") {
     import spark.implicits._
     val work = Files.createTempDirectory("graft_gm8").toString

@@ -66,4 +66,39 @@ class StreamMediaGateSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("out-of-order"), e.getMessage)
   }
+
+  test("a redelivered batch id or a kill before the state commit drains to the single-delivery verdicts") {
+    val all = media(0L until 40L)
+    val (b0, b1) = (all.filter(col("doc_id") < 20), all.filter(col("doc_id") >= 20))
+    val work = Files.createTempDirectory("graft_smg_replay").toString
+    def verdicts(tag: String) = StreamMediaGate.summary(spark, s"$work/$tag/out")
+      .collect().map(_.toString).sorted.toSeq
+    def run(tag: String)(second: (TxnLogState, String) => Unit): Seq[String] = {
+      val state = new TxnLogState(s"$work/$tag/state", spark, 8)
+      StreamMediaGate.applyBatch(state, b0, s"$work/$tag/out", 0L)
+      second(state, s"$work/$tag/out")
+      verdicts(tag)
+    }
+    val once = run("once")((st, out) => StreamMediaGate.applyBatch(st, b1, out, 1L))
+    assert(run("twice") { (st, out) =>
+      StreamMediaGate.applyBatch(st, b1, out, 1L)
+      StreamMediaGate.applyBatch(st, b1, out, 1L)
+    } == once, "redelivered batch id")
+    assert(run("killed") { (st, out) =>
+      val dying = new DieOnFirstCommit(st)
+      intercept[KilledAtCommit](StreamMediaGate.applyBatch(dying, b1, out, 1L))
+      StreamMediaGate.applyBatch(dying, b1, out, 1L)
+    } == once, "kill before the state commit")
+  }
+
+  test("StreamBlankGate: a redelivered batch id rewrites its own verdicts") {
+    val all = media(0L until 6L)
+    val work = Files.createTempDirectory("graft_sblank").toString
+    StreamBlankGate.applyBatch(all.filter(col("doc_id") < 3), s"$work/out", 0L)
+    StreamBlankGate.applyBatch(all.filter(col("doc_id") >= 3), s"$work/out", 1L)
+    StreamBlankGate.applyBatch(all.filter(col("doc_id") >= 3), s"$work/out", 1L)
+    val got = spark.read.parquet(s"$work/out").drop("batch")
+      .collect().map(_.toString).sorted.toSeq
+    assert(got == Multimodal.blankFilter(all).toDF().collect().map(_.toString).sorted.toSeq)
+  }
 }

@@ -191,10 +191,10 @@ class StreamNoveltySpec extends SparkSpec {
     for ((cuts, tag) <- Seq(Seq(2L, 4L) -> "a", Seq(1L, 5L) -> "b")) {
       val work = Files.createTempDirectory(s"graft_nbgate_$tag").toString
       val chunks = (Long.MinValue +: cuts :+ Long.MaxValue).sliding(2).toSeq
-      chunks.foreach { case Seq(lo, hi) =>
+      chunks.zipWithIndex.foreach { case (Seq(lo, hi), id) =>
         StreamNbGate.applyBatch(model, consts,
           df.filter(col("doc_id") > lo && col("doc_id") <= hi),
-          "doc_id", "text", s"$work/out")
+          "doc_id", "text", s"$work/out", id.toLong)
       }
       val got = spark.read.schema("doc_id long, n_tokens long, score_q long")
         .parquet(s"$work/out")
@@ -241,16 +241,19 @@ class StreamNoveltySpec extends SparkSpec {
                              Seq(Seq(5L, 4L), Seq(3L, 2L, 1L)) -> "rev")) {
       val work = Files.createTempDirectory(s"graft_scdec_$tag").toString
       val bg = Dedup.charBenchGrams(bench, "text", k)
-      order.foreach { ids =>
+      order.zipWithIndex.foreach { case (ids, id) =>
         StreamCharDecontamination.applyBatch(bg,
-          df.filter(col("doc_id").isin(ids: _*)), "doc_id", "text", k, s"$work/out")
+          df.filter(col("doc_id").isin(ids: _*)), "doc_id", "text", k, s"$work/out", id.toLong)
       }
+      // at-least-once: the last trigger redelivered under its own batch id
+      StreamCharDecontamination.applyBatch(bg, df.filter(col("doc_id").isin(order.last: _*)),
+        "doc_id", "text", k, s"$work/out", order.size - 1L)
       bg.destroy()
       val got = spark.read
         .schema("doc_id long, n_windows long, n_hits long, contaminated boolean")
         .parquet(s"$work/out")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSet
-      assert(got == expected, s"chunking $tag: $got vs $expected")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3))).toSeq
+      assert(got.sorted == expected.toSeq.sorted, s"chunking $tag with replayed last trigger")
     }
   }
 
@@ -273,9 +276,9 @@ class StreamNoveltySpec extends SparkSpec {
                              Seq(Seq(5L, 4L), Seq(3L, 2L, 1L)) -> "rev")) {
       val work = Files.createTempDirectory(s"graft_scspan_$tag").toString
       val bg = Dedup.charBenchGrams(bench, "text", k)
-      order.foreach { ids =>
+      order.zipWithIndex.foreach { case (ids, id) =>
         StreamCharSpanDecontamination.applyBatch(bg,
-          df.filter(col("doc_id").isin(ids: _*)), "doc_id", "text", k, s"$work/out")
+          df.filter(col("doc_id").isin(ids: _*)), "doc_id", "text", k, s"$work/out", id.toLong)
       }
       bg.destroy()
       val got = spark.read
@@ -316,16 +319,112 @@ class StreamNoveltySpec extends SparkSpec {
                              Seq(Seq(5L, 4L), Seq(3L, 2L, 1L)) -> "rev")) {
       val work = Files.createTempDirectory(s"graft_scensus_$tag").toString
       val idx = Dedup.charBenchGramIndex(bench, "bench_id", "text", k)
-      order.foreach { ids =>
+      order.zipWithIndex.foreach { case (ids, id) =>
         StreamContaminationCensus.applyBatch(idx,
-          df.filter(col("doc_id").isin(ids: _*)), "doc_id", "text", k, s"$work/out")
+          df.filter(col("doc_id").isin(ids: _*)), "doc_id", "text", k, s"$work/out", id.toLong)
       }
-      // at-least-once: replay the LAST trigger verbatim — the (item,
-      // doc) re-aggregation must swallow the duplicate pair rows
-      StreamContaminationCensus.applyBatch(idx,
-        df.filter(col("doc_id").isin(order.last: _*)), "doc_id", "text", k, s"$work/out")
+      // at-least-once: replay the LAST trigger verbatim under its own
+      // batch id — it must not double-count a doc
+      StreamContaminationCensus.applyBatch(idx, df.filter(col("doc_id").isin(order.last: _*)),
+        "doc_id", "text", k, s"$work/out", order.size - 1L)
       idx.destroy()
       assert(censusOf(work) == expected, s"chunking $tag with replayed last trigger")
     }
   }
+
+  /** Each keep-first gate as (name, applyBatch, output schema). */
+  private def keepFirstGates: Seq[(String, (DocStateStore, org.apache.spark.sql.DataFrame, String, Long) => Unit, String)] = Seq(
+    ("novelty", (st, b, out, id) => { StreamNovelty.applyBatch(st, b, "doc_id", "text", 3, out, id); () },
+      "doc_id long, n_windows long, n_novel long, novelty double"),
+    ("exact", (st, b, out, id) => { StreamExactDedup.applyBatch(st, b, "doc_id", "text", out, id); () },
+      "doc_id long, kept boolean"),
+    ("span", (st, b, out, id) => { StreamSpanDedup.applyBatch(st, b, "doc_id", "text", 3, out, id); () },
+      "doc_id long, n_tokens long, n_removed long, clean_text string"),
+    ("charspan", (st, b, out, id) => { StreamCharSpanDedup.applyBatch(st, b, "doc_id", "text", 5, out, id); () },
+      "doc_id long, n_chars long, n_removed long, clean_text string"))
+
+  test("keep-first gates: a redelivered batch id or a kill before the state commit drains to the single-delivery output") {
+    import spark.implicits._
+    val df = Seq(
+      1L -> "aa bb cc dd ee ff",
+      2L -> "gg hh ii jj kk ll",
+      3L -> "aa bb cc dd ee ff",
+      4L -> "gg hh ii jj zz yy xx ww",
+      5L -> "  AA bb cc dd ee ff ").toDF("doc_id", "text")
+    val (b0, b1) = (df.filter(col("doc_id") <= 2), df.filter(col("doc_id") > 2))
+    for ((name, apply, schema) <- keepFirstGates) {
+      val work = Files.createTempDirectory(s"graft_kf_$name").toString
+      def store(tag: String) = new TxnLogState(s"$work/$tag/seen", spark, 8)
+      def drained(tag: String) = spark.read.schema(schema).parquet(s"$work/$tag/out")
+        .drop("batch").collect().map(_.toString).sorted.toSeq
+      val once = store("once")
+      apply(once, b0, s"$work/once/out", 0L)
+      apply(once, b1, s"$work/once/out", 1L)
+      // the same batch id delivered twice: the second is a bit-exact
+      // redelivery of a committed batch
+      val twice = store("twice")
+      apply(twice, b0, s"$work/twice/out", 0L)
+      apply(twice, b1, s"$work/twice/out", 1L)
+      apply(twice, b1, s"$work/twice/out", 1L)
+      assert(drained("twice") == drained("once"), s"$name: redelivered batch id")
+      // killed between the output write and the state commit, then rerun
+      val killed = store("killed")
+      apply(killed, b0, s"$work/killed/out", 0L)
+      val dying = new DieOnFirstCommit(killed)
+      intercept[KilledAtCommit](apply(dying, b1, s"$work/killed/out", 1L))
+      apply(dying, b1, s"$work/killed/out", 1L)
+      assert(drained("killed") == drained("once"), s"$name: kill before the state commit")
+    }
+  }
+
+  test("StreamRepetitionGate: a redelivered batch id rewrites its own rows") {
+    import spark.implicits._
+    val df = Seq(
+      1L -> "the same line\nthe same line\nthe same line",
+      2L -> "one line\nanother line",
+      3L -> "a b c d e a b c d e a b c d e").toDF("doc_id", "text")
+    val work = Files.createTempDirectory("graft_srep").toString
+    StreamRepetitionGate.applyBatch(df.filter(col("doc_id") <= 1), "doc_id", "text", s"$work/out", 0L)
+    StreamRepetitionGate.applyBatch(df.filter(col("doc_id") > 1), "doc_id", "text", s"$work/out", 1L)
+    StreamRepetitionGate.applyBatch(df.filter(col("doc_id") > 1), "doc_id", "text", s"$work/out", 1L)
+    val got = spark.read.parquet(s"$work/out").drop("batch")
+      .collect().map(_.toString).sorted.toSeq
+    val batch = graft.ops.TextAnalysis.repetitionGate(df, "doc_id", "text")
+      .collect().map(_.toString).sorted.toSeq
+    assert(got == batch)
+  }
+}
+
+/** Thrown by [[DieOnFirstCommit]]. */
+final class KilledAtCommit extends RuntimeException("killed before the state commit")
+
+/** A [[TxnLogState]] whose first commit of any kind dies before it
+  * lands — the kill point between a gate's output write and its state
+  * commit. Every later call passes through. */
+final class DieOnFirstCommit(st: TxnLogState) extends DocStateStore {
+  @volatile private var died = false
+  private def dieOnce(): Unit = if (!died) { died = true; throw new KilledAtCommit }
+  def buckets: Int = st.buckets
+  def currentVersion: Option[String] = st.currentVersion
+  def liveBuckets: Set[Int] = st.liveBuckets
+  def read(): Option[org.apache.spark.sql.DataFrame] = st.read()
+  def readBuckets(ks: Seq[Int]): Option[org.apache.spark.sql.DataFrame] = st.readBuckets(ks)
+  def commit(updated: org.apache.spark.sql.DataFrame, version: String, touched: Seq[Int]): Unit = {
+    dieOnce(); st.commit(updated, version, touched)
+  }
+  override def commitAppend(fresh: org.apache.spark.sql.DataFrame, version: String,
+                            touched: Seq[Int]): Unit = {
+    dieOnce(); st.commitAppend(fresh, version, touched)
+  }
+  def stateMeta(key: String): Option[String] = st.stateMeta(key)
+  def commitWithMeta(updated: org.apache.spark.sql.DataFrame, version: String, touched: Seq[Int],
+                     kv: Map[String, String]): Unit = {
+    dieOnce(); st.commitWithMeta(updated, version, touched, kv)
+  }
+  def commitAppendWithMeta(fresh: org.apache.spark.sql.DataFrame, version: String,
+                           touched: Seq[Int], kv: Map[String, String]): Unit = {
+    dieOnce(); st.commitAppendWithMeta(fresh, version, touched, kv)
+  }
+  def vacuum(graceMs: Long): Seq[String] = st.vacuum(graceMs)
+  override def maintain(): Unit = st.maintain()
 }
